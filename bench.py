@@ -58,12 +58,10 @@ HEADLINE = (
     "media_features_jpeg_prog",  # progressive (SOF2) JPEG decode (r5)
     "media_features_gif",  # GIF87a/89a LZW decode (r5)
     "media_features_rle8", # BI_RLE8 BMP escape-machine decode (r5)
-    "media_features_flac", # FLAC Rice/LPC/CRC lossless decode (r5)
     "media_frames_avi",    # real AVI demux + frame sampling (r3)
     "media_frames_mjpeg",  # Motion-JPEG demux + per-frame JPEG decode (r4)
     "media_frames_gif",    # animated-GIF demux + per-frame LZW decode (r5)
     "doc_quality",         # text quality scoring
-    "tpch_q1",             # relational aggregate baseline
     "kg_link_scores",      # broadcast-dict linking (exact + Jaccard)
     "kg_edges",            # linking + CC + graph materialization
     "cc_components",       # contracted large-star/small-star CC

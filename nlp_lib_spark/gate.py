@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from nlp_lib_spark.lexicons import TESTDATA_CONFIG
+from nlp_lib_spark.operators.dedup import SEMDEDUP_N_CENTROIDS
 from nlp_lib_spark.operators.extract import (annotate_turns, extract_triples,
                                              mentions_from_annotations)
 from nlp_lib_spark.operators.viewsql import sql_over
@@ -2370,68 +2371,6 @@ FROM px
 """
 
 
-_FLAC_ORACLE = """
-WITH hx AS (
-  SELECT doc_id, md5(text) || md5(text || ':1') AS h FROM documents
-), b AS (
-  SELECT doc_id, g.k AS k,
-         (strpos('0123456789abcdef', substr(h, 2*g.k + 1, 1)) - 1) * 16
-         + strpos('0123456789abcdef', substr(h, 2*g.k + 2, 1)) - 1 AS v
-  FROM hx, generate_series(0, 31) AS g(k)
-), px AS (
-  SELECT doc_id, list(v ORDER BY k) AS p FROM b GROUP BY doc_id
-), sm AS (
-  SELECT doc_id, list_transform(generate_series(0, 15), t ->
-           p[2*t + 1] * 256 + p[2*t + 2] - 32768) AS s
-  FROM px
-)
-SELECT doc_id AS media_id, 'audio' AS kind,
-       array_to_string([8000, 16, list_min(s), list_max(s),
-         list_sum(list_transform(s, x -> abs(x)))] || s, ',') AS feature_sig
-FROM sm
-"""
-
-
-@gate("media_features_flac", oracle=_FLAC_ORACLE)
-def q_media_features_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL FLAC decode (operators/flac — the free-lossless bitstream
-    from the public spec, pure stdlib): every document becomes a genuine
-    FLAC file over the md5-derived 16-sample PCM16 stream, with the
-    residue class steering encoder features — multi-frame streams with
-    UTF-8-coded frame numbers (doc_id%5=1), partitioned Rice residuals
-    (=2), forced LPC subframes (=3), escape partitions (=4), automatic
-    constant/fixed selection otherwise.  The decoder walks STREAMINFO,
-    frame sync, CRC-8 + CRC-16, subframe types, Rice/escape residuals
-    and verifies the STREAMINFO MD5 of the reconstructed samples.  FLAC
-    is lossless, so the oracle recomputes the sample statistics
-    closed-form from the md5 expansion — a hash match proves the full
-    decode chain inverts the encoder bit-exactly.  n_bytes is excluded
-    like the PNG/JPEG gates: compressed size is an encoder knob, not a
-    data contract."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from nlp_lib_spark.operators.mediacodec import synth_flac_payload
-    from nlp_lib_spark.operators.multimodal import extract_media_features
-    register_views(spark, sf_dir)
-    docs = spark.table("documents").select("doc_id", "text")
-
-    def synth(batches):
-        for pdf in batches:
-            rows = [(int(d), "audio", synth_flac_payload(int(d), t))
-                    for d, t in zip(pdf["doc_id"], pdf["text"])]
-            yield pd.DataFrame(rows,
-                               columns=["media_id", "kind", "payload"])
-
-    media = _spread(docs).mapInPandas(
-        synth, schema="media_id long, kind string, payload binary")
-    return (extract_media_features(media, mode="real")
-            .select("media_id", "kind",
-                    F.expr("array_join(transform(features, x -> "
-                           "CAST(x AS BIGINT)), ',')")
-                    .alias("feature_sig")))
-
-
 @gate("media_features_g711", oracle=_G711_ORACLE)
 def q_media_features_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL companded-telephony-audio decode: documents become genuine
@@ -2888,7 +2827,8 @@ SELECT query_id, neighbor_id, sim FROM (
 """
 
 
-def _semdedup_oracle_sql(n_centroids: int = 16, iters: int = 2,
+def _semdedup_oracle_sql(n_centroids: int = SEMDEDUP_N_CENTROIDS,
+                         iters: int = 2,
                          scale: int = 1000, threshold: float = 0.3,
                          cluster_cap: int = 1000) -> str:
     """DuckDB replica of SemDeDup (operators/dedup.semdedup_pairs): the
@@ -2929,10 +2869,11 @@ def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantic pruning (operators/dedup.semdedup_pairs):
     k-means clusters from the shared exact-integer Lloyd loop, then
     keep-first-by-id within-cluster cosine dedup — one certified row per
-    dropped vector (dropped id, kept representative, similarity), the
-    ann schema so the gate unions into ann_variants.  The per-cluster
-    row_number cap (mirrored in the oracle) is the mega-cluster bound:
-    the pair stage can never exceed cluster_cap^2 rows per cluster."""
+    dropped vector (dropped id, best earlier in-cluster match,
+    similarity), the ann schema so the gate unions into ann_variants.
+    The per-cluster row_number cap (mirrored in the oracle) is the
+    mega-cluster bound: the pair stage can never exceed cluster_cap^2
+    rows per cluster."""
     from nlp_lib_spark.operators.dedup import semdedup_pairs
     register_views(spark, sf_dir)
     return semdedup_pairs(spark.table("embeddings"))
@@ -4499,29 +4440,9 @@ def q_cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Relational analogues (SURVEY.md §2.8) — SQL shared verbatim across engines
 # --------------------------------------------------------------------------
 
-shared_sql("tpch_q1", """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(avg(l_quantity), 4) AS avg_qty,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= DATE '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-""")
-
 shared_sql("top_event_types", """
 SELECT event_type, count(*) AS n, round(sum(value), 2) AS total_value
 FROM events GROUP BY event_type ORDER BY n DESC, event_type LIMIT 5
-""")
-
-shared_sql("cust_nation_rev", """
-SELECT n.n_name AS nation, count(*) AS n_orders,
-       round(sum(o.o_totalprice), 2) AS revenue
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-GROUP BY n.n_name
 """)
 
 shared_sql("fold_split", """
@@ -5357,23 +5278,17 @@ union_composite("kg_tree_kernels", "kernel", {
 
 
 def _rel_suite() -> None:
-    """Relational-analogue suite (SURVEY §2.8): the 7 small relational
+    """Relational-analogue suite (SURVEY §2.8): the 5 small relational
     gates fold into one composite with a ``(gate, payload)`` schema —
     each member row serializes to one string. Doubles are integerized
-    first (cents for 2dp money, 1e-4 units for 4dp averages) because
-    double->string rendering is NOT dialect-portable (Java flips to
-    scientific notation at 1e7; DuckDB never does), while BIGINT->STRING
-    is byte-identical everywhere. Intensities stay value-exact: the
-    members' own SQL already rounds to those scales."""
+    first (cents for 2dp money) because double->string rendering is NOT
+    dialect-portable (Java flips to scientific notation at 1e7; DuckDB
+    never does), while BIGINT->STRING is byte-identical everywhere.
+    Intensities stay value-exact: the members' own SQL already rounds to
+    that scale."""
     specs: dict[str, list[tuple[str, str]]] = {
-        "tpch_q1": [("l_returnflag", "s"), ("l_linestatus", "s"),
-                    ("sum_qty", "d2"), ("sum_base_price", "d2"),
-                    ("sum_disc_price", "d2"), ("avg_qty", "d4"),
-                    ("count_order", "i")],
         "top_event_types": [("event_type", "s"), ("n", "i"),
                             ("total_value", "d2")],
-        "cust_nation_rev": [("nation", "s"), ("n_orders", "i"),
-                            ("revenue", "d2")],
         "fold_split": [("fold", "i"), ("n", "i"), ("fold_value", "d2")],
         "union_distinct_keys": [("name", "s")],
         "pr_eval": [("l_returnflag", "s"), ("tp", "i"), ("fp", "i"),
@@ -5386,10 +5301,9 @@ def _rel_suite() -> None:
             return col
         if kind == "i":
             return f"CAST({col} AS STRING)"
-        scale = {"d2": 100, "d4": 10000}[kind]
-        # member SQL already rounded to the scale, so *scale is within
+        # "d2": member SQL already rounded to cents, so *100 is within
         # epsilon of an integer and round() agrees across dialects
-        return f"CAST(CAST(round({col} * {scale}) AS BIGINT) AS STRING)"
+        return f"CAST(CAST(round({col} * 100) AS BIGINT) AS STRING)"
 
     def member_sql(member: str, inner: str) -> str:
         payload = " || '|' || ".join(ser(c, k) for c, k in specs[member])
@@ -5498,8 +5412,7 @@ def _media_suite_composite() -> None:
                               ("gif", "media_features_gif"),
                               ("rle8", "media_features_rle8"),
                               ("jpeg", "media_features_jpeg"),
-                              ("jpegp", "media_features_jpeg_prog"),
-                              ("flac", "media_features_flac")):
+                              ("jpegp", "media_features_jpeg_prog")):
             out = out.unionByName(
                 QUERIES[member](spark, sf_dir)
                 .select(F.lit(codec).alias("codec"), "media_id", "kind",
@@ -5512,8 +5425,7 @@ def _media_suite_composite() -> None:
         "media_features", "media_features_real", "media_features_ima",
         "media_features_g711", "media_features_msadpcm",
         "media_features_png", "media_features_gif", "media_features_rle8",
-        "media_features_jpeg", "media_features_jpeg_prog",
-        "media_features_flac")
+        "media_features_jpeg", "media_features_jpeg_prog")
     ORACLES["media_suite"] = f"""
 SELECT 'fake' AS codec, m.* FROM ({ORACLES["media_features"]}
 ) m
@@ -5549,10 +5461,6 @@ UNION ALL
 SELECT 'jpegp' AS codec, media_id, kind, CAST(-1 AS INTEGER) AS n_bytes,
        feature_sig FROM ({ORACLES["media_features_jpeg_prog"]}
 ) m
-UNION ALL
-SELECT 'flac' AS codec, media_id, kind, CAST(-1 AS INTEGER) AS n_bytes,
-       feature_sig FROM ({ORACLES["media_features_flac"]}
-) m
 """
 
 
@@ -5583,9 +5491,9 @@ union_composite("media_frames", "codec", {
 # The correctness driver evaluates at most the FIRST 50 registry entries
 # (CORRECTNESS_r02 ran exactly the first 50 of 58 in dict order), so
 # registration order is a certification decision, not a cosmetic one.
-# Round-4 layout: the first 50 entries cover EVERY operator family with
-# zero rotation losses (VERDICT r3 "Next round" 4) — 12 composites fold
-# their 47 member gates into 12 in-cap slots, freeing the cap for the
+# Layout: the first 50 entries cover EVERY operator family with zero
+# rotation losses (VERDICT r3 "Next round" 4) — 15 composites fold their
+# 69 member gates into 15 in-cap slots, freeing the cap for the
 # dedup/ANN family and the small gates that rotated out in round 3.
 # Everything past position 50 is a composite MEMBER (certified inside its
 # composite's value hash, and still individually compared by
@@ -5593,9 +5501,8 @@ union_composite("media_frames", "codec", {
 # check_cap_coverage at import.
 _GATE_ORDER = [
     # -- composites (each certifies several member operators by tag/join) --
-    "rel_suite",          # tpch_q1 + top_event_types + cust_nation_rev +
-                          # fold_split + union_distinct_keys + pr_eval +
-                          # topk_terms
+    "rel_suite",          # top_event_types + fold_split +
+                          # union_distinct_keys + pr_eval + topk_terms
     "cc_components",
     "kg_rule_pairs",      # RelexRule1 / 2 / 2b / 3
     "ann_variants",       # brute / LSH / grid-IVF / k-means-IVF top-k
@@ -5637,7 +5544,6 @@ _GATE_ORDER = [
     "media_features_real", "media_features_ima", "media_features_g711",
     "media_features_msadpcm", "media_features_png", "media_features_gif",
     "media_features_rle8", "media_features_jpeg", "media_features_jpeg_prog",
-    "media_features_flac",
     "media_features", "media_frames_avi", "media_frames_mjpeg",
     "media_frames_gif",
     "ann_topk", "ann_topk_ivf_kmeans", "ann_topk_lsh", "ann_topk_ivf",
@@ -5648,8 +5554,8 @@ _GATE_ORDER = [
     "doc_pack", "doc_substring_dup", "doc_urls", "doc_contamination_norm",
     "token_counts_bpe", "doc_quality_model", "doc_pack_bpe",
     "doc_mix_pipeline", "doc_lm_filter", "bpe_train", "kg_tool_stats",
-    "tpch_q1", "top_event_types", "cust_nation_rev", "fold_split",
-    "union_distinct_keys", "pr_eval", "topk_terms",
+    "top_event_types", "fold_split", "union_distinct_keys", "pr_eval",
+    "topk_terms",
     "kg_rule1_pairs", "kg_rule2_pairs", "kg_rule3_pairs", "kg_rule2b_pairs",
 ]
 

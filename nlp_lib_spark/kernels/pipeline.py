@@ -160,25 +160,37 @@ def fused_subj_obj(mapping: dict[str, str],
     return mapping.get(parts[0], parts[0]), mapping.get(parts[1], parts[1])
 
 
+def pair_subj_obj(mapping: dict[str, str], blinded, i: int,
+                  j: int) -> tuple[str, str] | None:
+    """Token pair -> (subj, obj) surface forms; None for a same-token pair
+    (RelexRule5) whose token is not fused. The one pair emit rule of the
+    rule / ML / kernel extraction paths."""
+    if i == j:
+        return fused_subj_obj(mapping, blinded[i])
+    return (resolve_surface(mapping, blinded[i]),
+            resolve_surface(mapping, blinded[j]))
+
+
+def emit_triples(blinded, mapping: dict[str, str],
+                 domain: list[str | None], pairs) -> list[tuple]:
+    """(e1_tok, e2_tok, subj, pred, obj) per predicted pair — shared by the
+    fused chain (triples_for_sentence) and the staged one
+    (operators/extract.triples_from_annotations)."""
+    out = []
+    for (i, j) in pairs:
+        so = pair_subj_obj(mapping, blinded, i, j)
+        if so is not None:
+            out.append((i, j, so[0], _pred_term(domain, i, j), so[1]))
+    return out
+
+
 def triples_for_sentence(rt: KGRuntime, sentence: str) -> list[tuple]:
     """(e1_tok, e2_tok, subj, pred, obj) per predicted pair."""
     ann = annotate_sentence(rt, sentence)
     if ann is None or not ann["pairs"]:
         return []
-    blinded, mapping, domain = ann["blinded"], ann["mapping"], ann["domain"]
-    out = []
-    for (i, j) in ann["pairs"]:
-        pred = _pred_term(domain, i, j)
-        if i == j:  # fused same-token pair (RelexRule5)
-            so = fused_subj_obj(mapping, blinded[i])
-            if so is None:
-                continue
-            subj, obj = so
-        else:
-            subj = resolve_surface(mapping, blinded[i])
-            obj = resolve_surface(mapping, blinded[j])
-        out.append((i, j, subj, pred, obj))
-    return out
+    return emit_triples(ann["blinded"], ann["mapping"], ann["domain"],
+                        ann["pairs"])
 
 
 def extract_turn(rt: KGRuntime, text: str) -> list[tuple]:

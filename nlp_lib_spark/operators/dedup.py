@@ -30,6 +30,10 @@ from nlp_lib_spark.operators.viewsql import sql_over, unique_view
 
 _N_HASHES = 8
 _N_PLANES = 8
+# k of SemDeDup's k-means quantizer; the DuckDB oracle (gate.py) and the
+# pure-Python replica (tests/test_semdedup.py) import this one value
+SEMDEDUP_N_CENTROIDS = 16
+
 
 def _sql(df: DataFrame, sql: str) -> DataFrame:
     """Run SQL against ``df`` via a unique, immediately-dropped temp view
@@ -530,7 +534,8 @@ SELECT query_id, neighbor_id, CAST(sim AS DOUBLE) AS sim FROM (
 
 
 def semdedup_pairs(df: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding", n_centroids: int = 16,
+                   vec_col: str = "embedding",
+                   n_centroids: int = SEMDEDUP_N_CENTROIDS,
                    iters: int = 2, scale: int = 1000,
                    threshold: float = 0.3,
                    cluster_cap: int = 1000) -> DataFrame:
@@ -538,8 +543,10 @@ def semdedup_pairs(df: DataFrame, id_col: str = "vec_id",
     k-means-cluster the embedding space, then drop any vector whose
     cosine to an EARLIER (lower-id) vector in the same cluster clears
     ``threshold``.  Emits one row per dropped vector: ``(query_id = the
-    dropped vec, neighbor_id = the kept earlier vec it best matches,
-    sim)`` — the ann-gate schema, so the gate unions into ann_variants.
+    dropped vec, neighbor_id = the earlier in-cluster vec it best
+    matches, sim)`` — the ann-gate schema, so the gate unions into
+    ann_variants.  The neighbor is not necessarily kept: it may itself
+    have been dropped in favour of an even earlier vector.
 
     Keep-first-by-id is the deterministic stand-in for the paper's
     "keep one representative per semantic-duplicate set"; min-id

@@ -130,12 +130,12 @@ def triples_from_annotations(ann: DataFrame) -> DataFrame:
     """annotations (with the precomputed rule-union ``pairs`` column) ->
     triples, without re-running the annotate chain.
 
-    Same emit semantics as the fused ``extract_triples`` path
-    (kernels/pipeline.triples_for_sentence); lets one annotation pass
+    Same emit rule as the fused ``extract_triples`` path: both call
+    kernels/pipeline.emit_triples. Lets one annotation pass
     feed mentions, triples, clauses, and linking — the Spark analogue of
     the reference's four aligned per-doc files being read once
     (ppi/MLExtractor.java:61-69)."""
-    from nlp_lib_spark.kernels.pipeline import _pred_term, resolve_surface
+    from nlp_lib_spark.kernels.pipeline import emit_triples
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["conv_id", "turn_idx", "sent_id", "e1", "e2",
@@ -145,23 +145,12 @@ def triples_from_annotations(ann: DataFrame) -> DataFrame:
             for r in pdf.itertuples(index=False):
                 if not len(r.pairs):
                     continue
-                blinded = list(r.blinded)
                 mapping = dict(zip(r.mention_ids, r.mention_texts))
                 domain = [d if d else None for d in r.domain]
-                for p in r.pairs:
-                    i, j = int(p["e1"]), int(p["e2"])
-                    pred = _pred_term(domain, i, j)
-                    if i == j:
-                        parts = blinded[i].split("/")
-                        if len(parts) < 2:
-                            continue
-                        subj = mapping.get(parts[0], parts[0])
-                        obj = mapping.get(parts[1], parts[1])
-                    else:
-                        subj = resolve_surface(mapping, blinded[i])
-                        obj = resolve_surface(mapping, blinded[j])
-                    rows.append((r.conv_id, int(r.turn_idx), int(r.sent_id),
-                                 i, j, subj, pred, obj))
+                pairs = [(int(p["e1"]), int(p["e2"])) for p in r.pairs]
+                head = (r.conv_id, int(r.turn_idx), int(r.sent_id))
+                rows.extend(head + t for t in emit_triples(
+                    list(r.blinded), mapping, domain, pairs))
             yield pd.DataFrame(rows, columns=cols)
 
     return (ann.select("conv_id", "turn_idx", "sent_id", "blinded",

@@ -24,7 +24,7 @@ from nlp_lib_spark.kernels.kernelscore import (prototype_score,
                                                relation_instance)
 from nlp_lib_spark.kernels.pipeline import (KGConfig, KGRuntime,
                                             annotate_sentence,
-                                            resolve_surface)
+                                            pair_subj_obj)
 from nlp_lib_spark.kernels.text import split_sentences, strip_citations
 
 KERNEL_TRIPLES_SCHEMA = ("conv_id string, turn_idx int, sent_id int, "
@@ -114,19 +114,13 @@ def extract_triples_kernel(df: DataFrame, config: KGConfig,
                         s = prototype_score(inst, prototypes, kernel)
                         if s < threshold:
                             continue
-                        m = ann["mapping"]
                         i, j = inst["e1"], inst["e2"]
-                        if i == j:  # fused self-pair: parts are subj/obj
-                            parts = ann["blinded"][i].split("/")
-                            if len(parts) < 2:
-                                continue
-                            subj = m.get(parts[0], parts[0])
-                            obj = m.get(parts[1], parts[1])
-                        else:
-                            subj = resolve_surface(m, ann["blinded"][i])
-                            obj = resolve_surface(m, ann["blinded"][j])
-                        rows.append((conv, int(ti), sid, i, j, subj,
-                                     "interacts_with", obj, inst["type"],
+                        so = pair_subj_obj(ann["mapping"], ann["blinded"],
+                                           i, j)
+                        if so is None:
+                            continue
+                        rows.append((conv, int(ti), sid, i, j, so[0],
+                                     "interacts_with", so[1], inst["type"],
                                      round(s, 6)))
             yield pd.DataFrame(rows, columns=cols)
 

@@ -1013,11 +1013,6 @@ def decode_audio(data: bytes) -> tuple[int, list[int]]:
     """WAV dispatch on wFormatTag: 0x0001 PCM16 (stdlib wave), 0x0002
     MS ADPCM, 0x0006 / 0x0007 G.711 A-law / µ-law, or 0x0011 IMA ADPCM
     (own RIFF walks)."""
-    if data[:4] == b"fLaC":
-        from nlp_lib_spark.operators.flac import decode_flac
-        rate, _bps, channels = decode_flac(data)
-        # mono feature stream: channel 0 (the gate corpus is mono)
-        return rate, channels[0]
     fmt_tag = None
     if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
         for tag, off, _size in _iter_riff(data, 12, min(len(data), 64)):
@@ -1033,37 +1028,11 @@ def decode_audio(data: bytes) -> tuple[int, list[int]]:
     return decode_wav(data)
 
 
-def synth_flac_payload(doc_id: int, text: str) -> bytes:
-    """Deterministic FLAC gate corpus: the SAME 16-sample PCM16 stream
-    as media_features_real's audio half (md5_expand pairs), encoded as a
-    genuine FLAC file.  FLAC is lossless, so the decoded samples are the
-    closed form the DuckDB oracle recomputes regardless of which encoder
-    features the residue class exercises: multi-frame (UTF-8 frame
-    numbers), Rice partitions, forced LPC, escape partitions, and the
-    automatic constant/fixed path."""
-    from nlp_lib_spark.operators.flac import encode_flac
-    p = md5_expand(text, 32)
-    samples = [p[2 * t] * 256 + p[2 * t + 1] - 32768 for t in range(16)]
-    kw: dict = {}
-    m = doc_id % 5
-    if m == 1:
-        kw["block_size"] = 8                 # two frames
-    elif m == 2:
-        kw.update(block_size=16, partition_order=1)
-    elif m == 3:
-        kw["force"] = ("lpc", [2, -1], 1, 4)
-    elif m == 4:
-        kw["force_escape"] = True
-    block = kw.pop("block_size", 4096)
-    return encode_flac(samples, rate=8000, block_size=block, **kw)
-
-
 def real_features(data: bytes) -> list[float]:
     """Magic-byte dispatch for the real decode seam."""
     if data[:2] == b"BM" or data[:8] == PNG_SIG or data[:4] == b"GIF8":
         return image_features(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE" \
-            or data[:4] == b"fLaC":
+    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
         return audio_features(data)
     if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
         return video_features(data)
@@ -1072,7 +1041,7 @@ def real_features(data: bytes) -> list[float]:
     raise ValueError("unsupported media container (BMP, gray8 PNG, GIF, "
                      "baseline + progressive JPEG, PCM 8/16/24-bit WAV, "
                      "IMA-ADPCM WAV, MS-ADPCM WAV, G.711 u-law/A-law WAV, "
-                     "FLAC, uncompressed-DIB AVI and MJPG AVI are the "
+                     "uncompressed-DIB AVI and MJPG AVI are the "
                      "decoders available without optional codec deps)")
 
 

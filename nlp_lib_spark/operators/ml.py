@@ -18,7 +18,7 @@ from nlp_lib_spark.kernels.depgraph import DepGraph
 from nlp_lib_spark.kernels.features import pair_features
 from nlp_lib_spark.kernels.pipeline import (KGConfig, _pred_term,
                                             annotate_sentence,
-                                            fused_subj_obj, resolve_surface)
+                                            pair_subj_obj, resolve_surface)
 from nlp_lib_spark.kernels.scoring import score
 from nlp_lib_spark.kernels.text import split_sentences, strip_citations
 
@@ -73,18 +73,13 @@ def extract_triples_ml(df: DataFrame, config: KGConfig,
                         p = score(feats, weights, bias)
                         if p <= threshold:
                             continue
-                        m = ann["mapping"]
-                        if i == j:  # fused pair: parts are subj/obj
-                            so = fused_subj_obj(m, ann["blinded"][i])
-                            if so is None:
-                                continue
-                            subj, obj = so
-                        else:
-                            subj = resolve_surface(m, ann["blinded"][i])
-                            obj = resolve_surface(m, ann["blinded"][j])
+                        so = pair_subj_obj(ann["mapping"], ann["blinded"],
+                                           i, j)
+                        if so is None:
+                            continue
                         pred = _pred_term(ann["domain"], i, j)
-                        rows.append((conv, int(ti), sid, i, j, subj, pred,
-                                     obj, round(p, 4)))
+                        rows.append((conv, int(ti), sid, i, j, so[0], pred,
+                                     so[1], round(p, 4)))
             yield pd.DataFrame(rows, columns=cols)
 
     return (df.select("conv_id", "turn_idx", "text")

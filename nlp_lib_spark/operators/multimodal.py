@@ -104,6 +104,3 @@ def frame_sample(df: DataFrame, every_n: int = 10,
               .mapInPandas(fn, schema="media_id long, frame_idx int, "
                                       "features array<float>"))
 
-
-# Back-compat name from when real video decode was stubbed (round 2).
-frame_sample_stub = frame_sample

@@ -8,7 +8,7 @@ import pytest
 from nlp_lib_spark.fixtures import FIXTURE_CONFIG, generate_transcripts
 from nlp_lib_spark.operators.extract import extract_triples
 from nlp_lib_spark.operators.multimodal import (extract_media_features,
-                                                frame_sample_stub)
+                                                frame_sample)
 from nlp_lib_spark.streaming.ingest import run_stream_once
 
 
@@ -42,7 +42,7 @@ def test_video_frame_real_rejects_non_avi(spark, media_df):
     """mode="real" frame sampling is a genuine AVI demuxer since round 3;
     payloads that are not AVI containers must fail loudly."""
     with pytest.raises(Exception) as ei:
-        frame_sample_stub(media_df, mode="real").collect()
+        frame_sample(media_df, mode="real").collect()
     assert "not an AVI payload" in str(ei.value)
 
 
@@ -65,7 +65,7 @@ def test_video_frame_real_decodes_avi(spark):
 
 
 def test_frame_sampling_shape(spark, media_df):
-    out = frame_sample_stub(media_df, every_n=3).toPandas()
+    out = frame_sample(media_df, every_n=3).toPandas()
     # one input row explodes into >= 1 frame rows
     assert out.media_id.nunique() == 9
     assert (out.frame_idx % 3 == 0).all()

@@ -15,7 +15,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 
-from nlp_lib_spark.operators.dedup import semdedup_pairs
+from nlp_lib_spark.operators.dedup import SEMDEDUP_N_CENTROIDS, semdedup_pairs
 
 
 def _round4(x: float) -> float:
@@ -24,7 +24,8 @@ def _round4(x: float) -> float:
                                            rounding=ROUND_HALF_UP))
 
 
-def _py_semdedup(vecs: dict[int, list[float]], n_centroids=8, iters=2,
+def _py_semdedup(vecs: dict[int, list[float]],
+                 n_centroids=SEMDEDUP_N_CENTROIDS, iters=2,
                  scale=1000, threshold=0.3, cluster_cap=1000):
     ids = sorted(vecs)
     q = {i: [math.floor(x * scale + 0.5) for x in vecs[i]] for i in ids}
