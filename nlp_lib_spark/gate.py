@@ -1320,20 +1320,18 @@ def q_kg_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionization certified against the SAME oracle as the
     batch gate: Spark's merging ``session_window`` under an event-time
     watermark (streaming/ingest.stream_sessions), drained one file per
-    micro-batch, append mode.  A far-future flush-sentinel file written
-    LAST advances the watermark so every real session finalizes before
-    the drain ends (the sentinel's own never-finalized session is
-    filtered); ``window.end - gap`` recovers the batch convention
-    ``session_end = max(ts)``.  A hash match proves the native streaming
+    micro-batch, append mode.  Flush-sentinel files written LAST, past
+    the corpus' max event time, advance the watermark so every real
+    session finalizes before the drain ends (the sentinels' own
+    never-finalized session is filtered); ``window.end - gap`` recovers
+    the batch convention ``session_end = max(ts)``.  A hash match proves the native streaming
     session semantics equal the batch islands partition exactly."""
     import shutil
     import tempfile
     import uuid
 
-    from pyspark.sql import functions as F
-
-    from nlp_lib_spark.streaming.ingest import (SESSION_FLUSH_CONV,
-                                                run_stream_sessions_once)
+    from nlp_lib_spark.streaming.ingest import (
+        run_stream_sessions_once, write_session_flush_sentinels)
     register_views(spark, sf_dir)
     synth = spark.sql(_session_synth_sql("spark"))
     in_dir = tempfile.mkdtemp(prefix="kgx_stream_sessions_")
@@ -1344,30 +1342,9 @@ def q_kg_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and each extra stateful micro-batch costs ~3.5 s of state-store
         # round-trips at sf0.1 — 4 files measured 21-24 s vs ~14 s
         synth.repartition(2).write.mode("overwrite").parquet(in_dir)
-        # TWO staggered sentinel files (later mtimes => later micro-
-        # batches): the first advances the watermark past every real
-        # session, the second runs a batch UNDER that watermark and
-        # flushes them — append-mode emission lags the watermark by one
-        # batch, and the trailing no-data batch that would otherwise
-        # flush is not guaranteed under availableNow (observed: 187/234
-        # sessions with a single sentinel).  FileStreamSource orders by
-        # mtime, so the sentinels' mtimes are stamped explicitly (+2 s /
-        # +4 s past every data file) instead of sleeping between writes.
-        import glob
-        import os
-        seen = set(glob.glob(f"{in_dir}/*.parquet"))
-        t_max = max(os.path.getmtime(f) for f in seen)
-        for step, sentinel_ts in enumerate(
-                ("2035-01-01 00:00:00", "2035-01-01 01:00:00"), start=1):
-            spark.createDataFrame(
-                [(SESSION_FLUSH_CONV,)], "conv_id string") \
-                .select("conv_id",
-                        F.lit(sentinel_ts).cast("timestamp").alias("ts")) \
-                .coalesce(1).write.mode("append").parquet(in_dir)
-            now = set(glob.glob(f"{in_dir}/*.parquet"))
-            for f in now - seen:
-                os.utime(f, (t_max + 2 * step, t_max + 2 * step))
-            seen = now
+        # two staggered flush sentinels derived from the corpus' max
+        # event time (one sentinel alone left 187/234 sessions)
+        write_session_flush_sentinels(in_dir, synth)
         # state-store parallelism: session-window state costs scale with
         # (state partitions x micro-batches), and 1840 open sessions
         # need nowhere near 32 state partitions — 8 measured ~3x faster

@@ -58,7 +58,14 @@ def canonical_map(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
 
 def materialize_graph(triples: DataFrame, cmap: DataFrame
                       ) -> tuple[DataFrame, DataFrame]:
-    """Returns (nodes, edges) with canonical ids."""
+    """Returns (nodes, edges) with canonical ids.
+
+    Each call localCheckpoints the broadcast map and the canonicalized
+    triple frame both tables aggregate.  A caller that materializes the
+    two tables separately owns the reuse: it calls this once per
+    (triples, cmap) pair and frees the checkpoints after the second
+    write (``plans/checkpoint.full_kg_stages`` shares one call between
+    its nodes and edges stages; the pipeline frees them at run end)."""
     # the map is broadcast into TWO joins — localCheckpoint so the
     # linking/labeling subtree is computed once, not once per broadcast
     cm = F.broadcast(cmap.select("norm", "entity_id").distinct()

@@ -7,14 +7,20 @@ reproduces byte-identical output.
 Layout per stage under ``root``::
 
     <root>/<stage>/data/           parquet (Iceberg table in production)
-    <root>/<stage>/lineage/        parquet: (stage, partition_id, n_rows, checksum)
+    <root>/<stage>/lineage/        parquet: (partition_id, n_rows, checksum, stage)
     <root>/<stage>/_LINEAGE_OK     marker: stage complete + lineage verified
     <root>/_metrics.jsonl          append-only stage metrics (driver side)
 
 A stage is skipped on resume iff its marker exists; the marker is written
 only after the data write finished AND the lineage of the written files was
 recomputed and persisted — a half-written stage can never be mistaken for
-complete (parquet job-commit + marker ordering).
+complete (parquet job-commit + marker ordering).  Persisting a stage costs
+its data write plus one lineage aggregate over the written files: its
+result (at most one row per partition) is collected, the driver writes it
+with pyarrow and takes the marker's ``rows``, ``partitions`` and stage
+``checksum`` from the same rows.  Stage tables are read back with the
+schema stored in their parquet footers, so no read runs a schema-inference
+job.
 
 Checksums are order-insensitive within a partition (bit_xor of row hashes
 over the canonical JSON of each row), so lineage verification is stable
@@ -25,11 +31,30 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from collections.abc import Callable
+from functools import reduce
+from operator import xor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+from nlp_lib_spark.operators.canonicalize import (_persistent_ids,
+                                                  _unpersist_rdd_ids)
+
+#: the persisted lineage table's schema (the Spark types int, bigint,
+#: bigint, string)
+LINEAGE_SCHEMA = pa.schema([("partition_id", pa.int32()),
+                            ("n_rows", pa.int64()),
+                            ("checksum", pa.int64()),
+                            ("stage", pa.string())])
+
+#: parquet footer key under which Spark's writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
@@ -57,6 +82,31 @@ def _lineage(df: DataFrame) -> DataFrame:
                     "n_rows", "checksum"))
 
 
+def _read_stage(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job: the
+    schema Spark would infer is the one its writer stored in the part
+    files' footers (it writes one part file even for an empty frame),
+    read here on the driver (the root is driver-local)."""
+    part = min(f for f in os.listdir(path) if f.startswith("part-"))
+    meta = pq.read_schema(f"{path}/{part}").metadata
+    schema = StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(path)
+
+
+def _write_lineage(path: str, stage: str, rows: list) -> None:
+    """Persist collected ``_lineage`` rows as one parquet file (the
+    overwrite semantics of the Spark writer it replaces)."""
+    rows = sorted(rows, key=lambda r: r.partition_id)
+    table = pa.Table.from_pydict(
+        {"partition_id": [r.partition_id for r in rows],
+         "n_rows": [r.n_rows for r in rows],
+         "checksum": [r.checksum for r in rows],
+         "stage": [stage] * len(rows)}, schema=LINEAGE_SCHEMA)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(table, f"{path}/part-00000.parquet")
+
+
 class CheckpointedPipeline:
     def __init__(self, spark: SparkSession, root: str, stages: list[Stage]):
         if "://" in root:
@@ -78,6 +128,13 @@ class CheckpointedPipeline:
         base = f"{self.root}/{name}"
         return f"{base}/data", f"{base}/lineage", f"{base}/_LINEAGE_OK"
 
+    def marker(self, name: str) -> dict:
+        """A complete stage's marker: ``rows``, ``partitions`` and the
+        stage ``checksum`` (xor of the partition checksums), the same
+        for a stage computed by this run or resumed from an earlier one."""
+        with open(self._paths(name)[2]) as f:
+            return json.load(f)
+
     def _log_metric(self, rec: dict) -> None:
         os.makedirs(self.root, exist_ok=True)
         with open(f"{self.root}/_metrics.jsonl", "a") as f:
@@ -85,6 +142,23 @@ class CheckpointedPipeline:
 
     def run(self, inputs: dict[str, DataFrame] | None = None,
             resume: bool = True) -> dict[str, DataFrame]:
+        """Resume or compute every stage in order; returns each stage's
+        output re-read from its checkpoint (plus ``inputs``).
+
+        Stage functions may ``localCheckpoint`` frames that later stages
+        reuse (``full_kg_stages`` shares one graph build between nodes and
+        edges).  No returned frame depends on them, so every RDD persisted
+        while the run executes is freed when it ends (nothing else may
+        persist on the same SparkContext concurrently)."""
+        sc = self.spark.sparkContext
+        before = _persistent_ids(sc)
+        try:
+            return self._run(inputs, resume)
+        finally:
+            _unpersist_rdd_ids(sc, _persistent_ids(sc) - before)
+
+    def _run(self, inputs: dict[str, DataFrame] | None,
+             resume: bool) -> dict[str, DataFrame]:
         outputs: dict[str, DataFrame] = dict(inputs or {})
         # stages recomputed THIS run; anything depending on one of them
         # must also recompute — a resumed checkpoint derived from data
@@ -97,7 +171,7 @@ class CheckpointedPipeline:
             data_p, lin_p, marker = self._paths(stage.name)
             dep_dirty = any(d in dirty for d in stage.deps)
             if resume and not dep_dirty and os.path.exists(marker):
-                resumed = self.spark.read.parquet(data_p)
+                resumed = _read_stage(self.spark, data_p)
                 missing = set(stage.required_cols) - set(resumed.columns)
                 if not missing:
                     outputs[stage.name] = resumed
@@ -121,21 +195,17 @@ class CheckpointedPipeline:
             t0 = time.time()
             df = stage.fn(self.spark, outputs)
             df.write.mode("overwrite").parquet(data_p)
-            written = self.spark.read.parquet(data_p)
-            _lineage(written).withColumn("stage", F.lit(stage.name)) \
-                .write.mode("overwrite").parquet(lin_p)
-            # totals come from the tiny persisted lineage table — re-using
-            # the lin plan here would recompute the full xxhash scan of
-            # the stage data a second time just for two numbers
-            totals = (self.spark.read.parquet(lin_p)
-                      .agg(F.sum("n_rows").alias("rows"),
-                           F.count(F.lit(1)).alias("parts")).collect()[0])
+            written = _read_stage(self.spark, data_p)
+            lineage = _lineage(written).collect()
+            _write_lineage(lin_p, stage.name, lineage)
+            totals = {"rows": sum(r.n_rows for r in lineage),
+                      "partitions": len(lineage),
+                      "checksum": reduce(xor, (r.checksum for r in lineage),
+                                         0)}
             with open(marker, "w") as f:
-                f.write(json.dumps({"rows": int(totals.rows or 0),
-                                    "partitions": int(totals.parts)}))
+                f.write(json.dumps(totals))
             self._log_metric({"stage": stage.name, "event": "complete",
-                              "rows": int(totals.rows or 0),
-                              "partitions": int(totals.parts),
+                              **totals,
                               "wall_sec": round(time.time() - t0, 3),
                               "ts": time.time()})
             outputs[stage.name] = written
@@ -193,6 +263,8 @@ def full_kg_stages(sf_dir: str, config, dictionary: tuple[str, ...],
     from nlp_lib_spark.operators.extract import mentions_from_annotations
     from nlp_lib_spark.operators.graph import canonical_map, materialize_graph
 
+    graph: dict = {}
+
     def s_discourse(spark, outs):
         return discourse_relations(outs["annotations"])
 
@@ -205,12 +277,26 @@ def full_kg_stages(sf_dir: str, config, dictionary: tuple[str, ...],
                                     "entity string")
         return canonical_map(mentions, ddf)
 
+    def built(spark, outs):
+        # one materialize_graph per (triples, cmap) pair: nodes and edges
+        # share its broadcast map and checkpointed triple frame, which
+        # the pipeline frees when the run ends (a later run rebuilds)
+        key = (outs["triples"], outs["cmap"])
+        sc = spark.sparkContext
+        if not (graph and all(a is b for a, b in zip(graph["key"], key))
+                and graph["rdds"] <= _persistent_ids(sc)):
+            before = _persistent_ids(sc)
+            graph["frames"] = materialize_graph(*key)
+            graph["rdds"] = _persistent_ids(sc) - before
+            graph["key"] = key
+        return graph["frames"]
+
     def s_nodes(spark, outs):
-        nodes, _edges = materialize_graph(outs["triples"], outs["cmap"])
+        nodes, _edges = built(spark, outs)
         return nodes
 
     def s_edges(spark, outs):
-        _nodes, edges = materialize_graph(outs["triples"], outs["cmap"])
+        _nodes, edges = built(spark, outs)
         return edges.withColumn("weight", F.col("weight").cast("long"))
 
     stages = kg_stages(sf_dir, config) + [

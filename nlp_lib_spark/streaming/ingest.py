@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 
 from nlp_lib_spark.kernels.pipeline import KGConfig
 from nlp_lib_spark.operators.extract import extract_triples
+from nlp_lib_spark.operators.sessions import SESSION_GAP_S
 
 TRANSCRIPTS_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -161,9 +162,49 @@ CONV_TS_SCHEMA = T.StructType([
 #: the sentinel's own session never finalizes and is filtered out)
 SESSION_FLUSH_CONV = "__flush"
 
+#: watermark delay of the unordered-replay drain (run_stream_sessions_once)
+SESSION_REPLAY_DELAY_DAYS = 3650
+
+
+def write_session_flush_sentinels(input_dir: str, events: DataFrame) -> None:
+    """Append the two flush-sentinel files that finalize every session of
+    ``events`` (conv_id, ts), already written to ``input_dir``, for a
+    drain with the default gap and delay of run_stream_sessions_once.
+
+    The first sentinel sits ``delay + gap`` plus an hour's margin past
+    the corpus' max event time, so the watermark it sets (its time minus
+    the delay) passes every session's window end (last ts + gap); the
+    second, an hour later, runs a batch under that watermark and flushes
+    them — append-mode emission lags the watermark by one batch, and the
+    trailing no-data batch is not guaranteed under availableNow.
+    Deriving both from the data keeps the drain loss-free at any corpus
+    size (literal far-future dates stop covering a large enough corpus).
+    FileStreamSource orders files by mtime, so each sentinel file is
+    stamped 2 s after the previous file instead of sleeping."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+    margin = 3600
+    lead = SESSION_REPLAY_DELAY_DAYS * 86400 + SESSION_GAP_S + margin
+    latest = events.agg(F.max("ts").alias("m"))
+    seen = set(glob.glob(f"{input_dir}/*.parquet"))
+    t_max = max(os.path.getmtime(f) for f in seen)
+    for step in (1, 2):
+        secs = lead + (step - 1) * margin
+        (latest.select(F.lit(SESSION_FLUSH_CONV).alias("conv_id"),
+                       F.expr(f"timestampadd(SECOND, {secs}, m)")
+                       .alias("ts"))
+         .coalesce(1).write.mode("append").parquet(input_dir))
+        now = set(glob.glob(f"{input_dir}/*.parquet"))
+        for f in now - seen:
+            os.utime(f, (t_max + 2 * step, t_max + 2 * step))
+        seen = now
+
 
 def stream_sessions(spark: SparkSession, input_dir: str,
-                    gap_seconds: int = 1800, delay: str = "10 seconds",
+                    gap_seconds: int = SESSION_GAP_S,
+                    delay: str = "10 seconds",
                     max_files_per_trigger: int | None = 1) -> DataFrame:
     """Structured-Streaming sessionization: Spark's merging
     ``session_window(ts, gap)`` per conv_id under an event-time
@@ -184,8 +225,8 @@ def stream_sessions(spark: SparkSession, input_dir: str,
 
 
 def run_stream_sessions_once(spark: SparkSession, input_dir: str,
-                             gap_seconds: int = 1800,
-                             delay: str = "3650 days",
+                             gap_seconds: int = SESSION_GAP_S,
+                             delay: str = f"{SESSION_REPLAY_DELAY_DAYS} days",
                              query_name: str = "sessions_stream",
                              max_files_per_trigger: int | None = 1
                              ) -> DataFrame:
@@ -200,10 +241,11 @@ def run_stream_sessions_once(spark: SparkSession, input_dir: str,
     range), so a small watermark delay silently DROPS rows that arrive
     in a later file than the watermark-advancing maximum (observed:
     185/234 sessions at 10 s).  A delay wider than the corpus span
-    models "unordered replay"; the flush sentinel's far-future event
-    time still lands beyond delay + every session end, so finalization
-    is unaffected.  A live deployment with roughly-ordered arrival uses
-    a delay matched to its real disorder instead."""
+    models "unordered replay"; the flush sentinels
+    (:func:`write_session_flush_sentinels`) are placed past delay + every
+    session end, so finalization is unaffected.  A live deployment with
+    roughly-ordered arrival uses a delay matched to its real disorder
+    instead."""
     q = (stream_sessions(spark, input_dir, gap_seconds, delay=delay,
                          max_files_per_trigger=max_files_per_trigger)
          .writeStream.outputMode("append")

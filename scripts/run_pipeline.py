@@ -37,15 +37,14 @@ def main() -> None:
         spark, root, full_kg_stages(sf_dir, TESTDATA_CONFIG,
                                     TESTDATA_ENTITIES,
                                     lll_config=lll_config()))
-    outs = pipe.run()
+    pipe.run()
     summary = {
         "sf_dir": sf_dir,
         "checkpoint_root": root,
         "wall_sec": round(time.time() - t0, 2),
         "stages_computed": {k: v for k, v in pipe.computed.items()},
-        "rows": {name: outs[name].count() for name in
-                 ("transcripts", "annotations", "triples", "discourse",
-                  "hor_edges", "cmap", "nodes", "edges", "lll_triples")},
+        "rows": {stage.name: pipe.marker(stage.name)["rows"]
+                 for stage in pipe.stages},
     }
     print(json.dumps(summary))
     spark.stop()

@@ -165,3 +165,106 @@ def test_checkpoint_rejects_remote_root(spark, fixture_df):
     with _pytest.raises(ValueError, match="driver-local"):
         CheckpointedPipeline(spark, "s3a://bucket/ckpt",
                              _stages(fixture_df))
+
+
+def test_driver_lineage_equals_spark_recompute(spark, fixture_df, tmp_path):
+    """The lineage table the driver writes equals a Spark recomputation
+    of ``_lineage`` over the stage's written data, row for row, with the
+    column types of the Spark writer it replaced; the stage frames the
+    pipeline returns carry the schema Spark itself infers."""
+    from pyspark.sql import functions as F
+
+    from nlp_lib_spark.plans.checkpoint import _lineage
+
+    root = str(tmp_path / "ckpt")
+    outs = CheckpointedPipeline(spark, root, _stages(fixture_df)).run()
+    for s in ("transcripts", "annotations", "triples"):
+        assert outs[s].schema == spark.read.parquet(f"{root}/{s}/data").schema
+        got = spark.read.parquet(f"{root}/{s}/lineage")
+        assert got.dtypes == [("partition_id", "int"), ("n_rows", "bigint"),
+                              ("checksum", "bigint"), ("stage", "string")]
+        want = (_lineage(spark.read.parquet(f"{root}/{s}/data"))
+                .withColumn("stage", F.lit(s)))
+        assert (sorted(map(tuple, got.collect()))
+                == sorted(map(tuple, want.collect())))
+
+
+def test_marker_totals_come_from_lineage(spark, fixture_df, tmp_path):
+    """Marker ``rows`` is the sum of the lineage ``n_rows``, ``partitions``
+    its row count and ``checksum`` the xor of the partition checksums, for
+    an empty stage too; the metrics record carries the same totals, and
+    ``marker()`` reads them back for a resumed stage."""
+    import json
+    from functools import reduce
+    from operator import xor
+
+    root = str(tmp_path / "ckpt")
+    stages = _stages(fixture_df) + [
+        Stage("empty", lambda sp, o: o["transcripts"].filter("false"),
+              deps=("transcripts",))]
+    pipe = CheckpointedPipeline(spark, root, stages)
+    pipe.run()
+    with open(f"{root}/_metrics.jsonl") as f:
+        complete = {r["stage"]: r for r in map(json.loads, f)
+                    if r["event"] == "complete"}
+    for s in ("transcripts", "annotations", "triples", "empty"):
+        lin = spark.read.parquet(f"{root}/{s}/lineage").collect()
+        marker = pipe.marker(s)
+        assert marker == {"rows": sum(r.n_rows for r in lin),
+                          "partitions": len(lin),
+                          "checksum": reduce(xor, (r.checksum for r in lin),
+                                             0)}
+        assert marker["rows"] == spark.read.parquet(
+            f"{root}/{s}/data").count()
+        assert {k: complete[s][k] for k in marker} == marker
+    assert pipe.marker("empty") == {"rows": 0, "partitions": 0,
+                                    "checksum": 0}
+
+    resumed = CheckpointedPipeline(spark, root, stages)
+    resumed.run()
+    assert not any(resumed.computed.values())
+    assert resumed.marker("triples") == pipe.marker("triples")
+
+
+def test_full_kg_graph_stages_share_one_build(spark, fixture_df, tmp_path,
+                                              monkeypatch):
+    """``full_kg_stages`` derives nodes and edges from ONE
+    ``materialize_graph`` call, and both tables equal a standalone
+    ``materialize_graph(triples, cmap)`` as multisets; the shared
+    checkpoints are freed when the run ends."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from nlp_lib_spark.fixtures import FIXTURE_ENTITIES
+    from nlp_lib_spark.operators import graph
+    from nlp_lib_spark.operators.canonicalize import _persistent_ids
+    from nlp_lib_spark.plans.checkpoint import full_kg_stages
+
+    calls = []
+    real = graph.materialize_graph
+
+    def counting(triples, cmap):
+        calls.append(1)
+        return real(triples, cmap)
+    monkeypatch.setattr(graph, "materialize_graph", counting)
+
+    stages = full_kg_stages(None, FIXTURE_CONFIG, FIXTURE_ENTITIES)
+    stages[0].fn = _stages(fixture_df)[0].fn
+    root = str(tmp_path / "kg")
+    sc = spark.sparkContext
+    before = _persistent_ids(sc)
+    CheckpointedPipeline(spark, root, stages).run()
+    assert len(calls) == 1
+    assert _persistent_ids(sc) - before == set()
+
+    def stage(s):
+        return spark.read.parquet(f"{root}/{s}/data")
+
+    def bag(df):
+        return Counter(map(tuple, df.collect()))
+    nodes, edges = real(stage("triples"), stage("cmap"))
+    edges = edges.withColumn("weight", F.col("weight").cast("long"))
+    assert stage("edges").count() > 0
+    assert bag(stage("nodes")) == bag(nodes)
+    assert bag(stage("edges")) == bag(edges)

@@ -115,3 +115,29 @@ def test_streaming_drain_equals_batch(spark):
     finally:
         shutil.rmtree(d, ignore_errors=True)
     assert got == batch
+
+
+def test_flush_sentinels_follow_the_corpus(spark):
+    """The flush sentinels are derived from the corpus' max event time,
+    so a corpus whose sessions end past any fixed far-future literal's
+    reach (the 3650-day replay delay puts a 2035 sentinel's watermark
+    in early 2025) still drains every session."""
+    from nlp_lib_spark.streaming.ingest import (
+        run_stream_sessions_once, write_session_flush_sentinels)
+    late = dt.timedelta(days=365 * 7)
+    rows = [(c, ts + late) for c, ts in _rand_rows(8, 60)]
+    df = spark.createDataFrame(rows, "conv_id string, ts timestamp")
+    batch = sorted((r.conv_id, r.session_start, r.session_end, r.n_turns)
+                   for r in sessionize(df).collect())
+    d = tempfile.mkdtemp(prefix="sess_late_")
+    try:
+        df.repartition(3).write.mode("overwrite").parquet(d)
+        write_session_flush_sentinels(d, df)
+        out = run_stream_sessions_once(spark, d, query_name="sess_late_q")
+        got = sorted((r.conv_id, r.session_start, r.session_end,
+                      r.n_turns) for r in out.collect())
+        spark.catalog.dropTempView("sess_late_q")
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+    assert len(batch) > 0
+    assert got == batch
