@@ -51,16 +51,8 @@ HEADLINE = (
     "dedup_exact",         # exact dedup by content hash
     "ann_topk",            # brute-force cosine top-k
     "media_features_real", # real BMP/WAV decode + pixel/sample stats (r3)
-    "media_features_jpeg", # baseline JPEG decode (Huffman+dequant+IDCT, r4)
-    "media_features_ima",  # IMA-ADPCM compressed-audio decode (r5)
-    "media_features_g711", # G.711 u-law/A-law companded audio decode (r5)
-    "media_features_msadpcm",  # MS-ADPCM two-tap predictor decode (r5)
-    "media_features_jpeg_prog",  # progressive (SOF2) JPEG decode (r5)
-    "media_features_gif",  # GIF87a/89a LZW decode (r5)
     "media_features_rle8", # BI_RLE8 BMP escape-machine decode (r5)
     "media_frames_avi",    # real AVI demux + frame sampling (r3)
-    "media_frames_mjpeg",  # Motion-JPEG demux + per-frame JPEG decode (r4)
-    "media_frames_gif",    # animated-GIF demux + per-frame LZW decode (r5)
     "doc_quality",         # text quality scoring
     "kg_link_scores",      # broadcast-dict linking (exact + Jaccard)
     "kg_edges",            # linking + CC + graph materialization

@@ -8,13 +8,15 @@ Arrow-batched ``mapInPandas`` operators. Two modes:
   runs/partitions, so the Spark-side plumbing — schema, partitioning, UDF
   signature, batch shape — is testable independent of any codec).
 * ``mode="real"`` — genuine decode via ``operators/mediacodec``: magic-byte
-  dispatch across an uncompressed-24bpp-BMP parser (struct + row padding +
-  bottom-up/top-down handling), a gray8 PNG reader (zlib inflate + all
-  five filter reconstructions), a stdlib PCM16 WAV reader, and an
+  dispatch across a BMP parser (24-bit: struct + row padding +
+  bottom-up/top-down handling; 8-bit palette, raw or BI_RLE8), a gray8
+  PNG reader (zlib inflate + all five filter reconstructions), a stdlib
+  linear-PCM WAV reader (8/16/24-bit, stereo downmix), and an
   uncompressed-DIB AVI demuxer (RIFF chunk walk) for real video frame
   sampling — emitting pixel/sample statistics + a 4x4 nearest-neighbor
-  resize. PIL/librosa/pyav are absent from this container (recorded in
-  BASELINE.md); richer compressed codecs plug in at
+  resize. Any other container or codec is rejected with ``ValueError``.
+  PIL/librosa/pyav are absent from this container (recorded in
+  BASELINE.md); richer codecs would plug in at
   ``mediacodec.real_features``.
 """
 

@@ -131,8 +131,9 @@ def test_cap_coverage_check_fires_on_uncovered_gate():
     coverage and pass once a composite covers it."""
     import pytest
 
-    from nlp_lib_spark.gate import (COMPOSITE_MEMBERS, DRIVER_CERTIFIED,
-                                    QUERIES, check_cap_coverage)
+    from nlp_lib_spark.gate import (_GATE_ORDER, COMPOSITE_MEMBERS,
+                                    DRIVER_CERTIFIED, QUERIES,
+                                    check_cap_coverage)
     order = [f"g{i}" for i in range(6)]
     members = {"g0": ("g3", "g4")}
     # ValueError, not AssertionError: the check must survive python -O
@@ -148,3 +149,9 @@ def test_cap_coverage_check_fires_on_uncovered_gate():
     # and the real registry passes at the real cap, with the real members
     check_cap_coverage(list(QUERIES), COMPOSITE_MEMBERS)
     assert len(DRIVER_CERTIFIED) == 50
+    # _apply_gate_order silently skips unregistered _GATE_ORDER names, so
+    # a deleted gate could leave a stale layout entry: none may exist, and
+    # every composite member must be a registered gate
+    assert [n for n in _GATE_ORDER if n not in QUERIES] == []
+    assert [m for ms in COMPOSITE_MEMBERS.values() for m in ms
+            if m not in QUERIES] == []

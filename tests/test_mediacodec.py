@@ -75,9 +75,23 @@ def test_wav_roundtrip(samples, rate):
     assert (rate2, samples2) == (rate, samples)
 
 
+def _with_wav_format_tag(tag):
+    blob = bytearray(encode_wav([1, -2, 3], 8000))
+    struct.pack_into("<H", blob, 20, tag)  # fmt chunk body starts at 20
+    return bytes(blob)
+
+
 def test_wav_rejects_garbage():
     with pytest.raises(ValueError):
         decode_wav(b"RIFFxxxxAVI LIST")
+    # IEEE float (3), IMA ADPCM (0x11), a header-only RIFF and a cut-off
+    # data chunk: ValueError from every entry point, never wave.Error
+    for bad in (_with_wav_format_tag(3), _with_wav_format_tag(0x0011),
+                b"RIFF\x04\x00\x00\x00WAVE",
+                encode_wav([1, -2, 3], 8000)[:-3]):
+        for fn in (decode_wav, real_features):
+            with pytest.raises(ValueError):
+                fn(bad)
 
 
 def test_real_features_dispatch_and_values():
@@ -92,8 +106,11 @@ def test_real_features_dispatch_and_values():
     feats = real_features(encode_wav(s, 8000))
     assert feats[:5] == [8000.0, 3.0, -5.0, 7.0, 12.0]
     assert feats[5:] == [-5.0, 7.0] + [0.0] * 14
-    with pytest.raises(ValueError):
-        real_features(b"\x00\x01mystery")
+    # unknown and removed containers (JPEG SOI, GIF signature) raise
+    for bad in (b"\x00\x01mystery", b"\xff\xd8\xff\xe0\x00\x10JFIF\x00",
+                b"GIF89a\x08\x00\x08\x00\x80\x00\x00"):
+        with pytest.raises(ValueError):
+            real_features(bad)
 
 
 @settings(max_examples=60, deadline=None)
@@ -134,6 +151,17 @@ def test_avi_roundtrip(n_frames, w, h, data):
 def test_avi_rejects_garbage():
     with pytest.raises(ValueError):
         decode_avi(b"RIFFxxxxWAVEdata")
+    # a GIF signature is no video container for frame sampling either
+    with pytest.raises(ValueError):
+        frame_features(b"GIF89a\x08\x00\x08\x00\x80\x00\x00")
+    # a DIB AVI whose strf claims a compressed (MJPG) stream must be
+    # rejected, not decoded as raw DIB frames
+    blob = bytearray(encode_avi([[0] * 8], 4, 2))
+    strf = blob.index(b"strf") + 8
+    blob[strf + 16:strf + 20] = b"MJPG"  # BITMAPINFOHEADER.biCompression
+    for fn in (decode_avi, real_features, frame_features):
+        with pytest.raises(ValueError, match="compression"):
+            fn(bytes(blob))
 
 
 def test_frame_features_sampling():
@@ -210,672 +238,6 @@ def test_extract_media_features_real_spark(spark):
         assert out[i]["kind"] == kind
         assert out[i]["n_bytes"] == len(blob)
         assert [round(x, 4) for x in out[i]["features"]] == expect
-
-
-# ------------------------------------------------------------ JPEG (round 4)
-
-def _flat_raster(dcs):
-    from nlp_lib_spark.operators.mediacodec import _flat_block_raster
-    return _flat_block_raster(dcs)
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.integers(0, 255), min_size=4, max_size=4))
-def test_jpeg_flat_block_roundtrip_exact(dcs):
-    """Flat 8x8 blocks with DC quant step 8 decode bit-exactly — the
-    property the media_features_jpeg gate's closed-form oracle relies on."""
-    from nlp_lib_spark.operators.mediacodec import decode_jpeg, encode_jpeg
-    raster = _flat_raster(dcs)
-    w, h, out = decode_jpeg(encode_jpeg(raster, 16, 16))
-    assert (w, h) == (16, 16)
-    assert out == raster
-
-
-@settings(max_examples=15, deadline=None)
-@given(st.data())
-def test_jpeg_general_roundtrip_near_lossless_at_q1(data):
-    """Arbitrary images at quant step 1: the full AC path (run lengths,
-    size categories, negative amplitudes) must reconstruct within the
-    float-rounding budget (|diff| <= 1)."""
-    from nlp_lib_spark.operators.mediacodec import decode_jpeg, encode_jpeg
-    bw = data.draw(st.integers(1, 3))
-    bh = data.draw(st.integers(1, 3))
-    w, h = 8 * bw, 8 * bh
-    img = data.draw(st.lists(st.integers(0, 255), min_size=w * h,
-                             max_size=w * h))
-    w2, h2, out = decode_jpeg(encode_jpeg(img, w, h, q_dc=1, q_ac=1))
-    assert (w2, h2) == (w, h)
-    assert max(abs(a - b) for a, b in zip(img, out)) <= 1
-
-
-def test_jpeg_zrl_and_eob_paths():
-    """A nearly-constant image forces >=16-zero AC runs (ZRL) and early
-    EOBs; a checkerboard forces dense high-frequency ACs."""
-    from nlp_lib_spark.operators.mediacodec import decode_jpeg, encode_jpeg
-    img = [100] * (24 * 16)
-    img[5], img[100], img[383] = 240, 3, 17
-    _, _, out = decode_jpeg(encode_jpeg(img, 24, 16, q_dc=1, q_ac=1))
-    assert max(abs(a - b) for a, b in zip(img, out)) <= 1
-    checker = [(255 if (x + y) % 2 else 0) for y in range(16)
-               for x in range(16)]
-    _, _, out2 = decode_jpeg(encode_jpeg(checker, 16, 16, q_dc=1, q_ac=1))
-    assert max(abs(a - b) for a, b in zip(checker, out2)) <= 1
-
-
-def test_jpeg_rejects_garbage_and_unsupported():
-    from nlp_lib_spark.operators.mediacodec import decode_jpeg, encode_jpeg
-    with pytest.raises(ValueError):
-        decode_jpeg(b"not a jpeg")
-    good = encode_jpeg(_flat_raster([1, 2, 3, 4]), 16, 16)
-    # flip SOF0 -> SOF2 (progressive) — must raise, not mis-decode
-    bad = good.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(ValueError):
-        decode_jpeg(bad)
-    with pytest.raises(ValueError):
-        encode_jpeg([0] * 12, 4, 3)  # non-multiple-of-8 dims
-
-
-def test_jpeg_byte_stuffing_roundtrip():
-    """DC values chosen so the entropy stream contains 0xFF bytes (the
-    encoder must stuff 0x00, the decoder must unstuff)."""
-    from nlp_lib_spark.operators.mediacodec import decode_jpeg, encode_jpeg
-    for dcs in ([255, 255, 255, 255], [0, 255, 0, 255], [128, 127, 129, 126]):
-        raster = _flat_raster(dcs)
-        blob = encode_jpeg(raster, 16, 16)
-        assert decode_jpeg(blob)[2] == raster
-
-
-def test_mjpeg_avi_roundtrip_and_sampling():
-    from nlp_lib_spark.operators.mediacodec import (decode_avi,
-                                                    encode_mjpeg_avi,
-                                                    frame_features)
-    frames = [_flat_raster([10 * k, 20, 30, 40]) for k in range(1, 5)]
-    blob = encode_mjpeg_avi(frames, 16, 16)
-    w, h, out = decode_avi(blob)
-    assert (w, h) == (16, 16) and out == frames
-    sampled = frame_features(blob, every_n=2)
-    assert [k for k, _ in sampled] == [0, 2]
-    assert sampled[0][1][:5] == [16.0, 16.0, 10.0, 40.0,
-                                 float(64 * (10 + 20 + 30 + 40))]
-
-
-def test_synth_jpeg_matches_oracle_model():
-    """synth_jpeg_payload/synth_mjpeg_payload decode to exactly the
-    md5-expansion model the DuckDB oracles recompute closed-form."""
-    from nlp_lib_spark.operators.mediacodec import (decode_avi, decode_jpeg,
-                                                    md5_expand,
-                                                    synth_jpeg_payload,
-                                                    synth_mjpeg_payload)
-    text = "the cat sat on the mat"
-    w, h, gray = decode_jpeg(synth_jpeg_payload(text))
-    dcs = list(md5_expand(text, 4))
-    assert (w, h) == (16, 16) and gray == _flat_raster(dcs)
-    w, h, frames = decode_avi(synth_mjpeg_payload(text))
-    assert (w, h) == (16, 16)
-    for k, f in enumerate(frames):
-        assert f == _flat_raster(list(md5_expand(f"{text}#j{k}", 4)))
-
-
-# ------------------------------------------------- IMA ADPCM WAV (round 5)
-
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.integers(-32768, 32767), min_size=1, max_size=64),
-       st.sampled_from([8000, 16000]))
-def test_ima_decode_inverts_nibble_stream(samples, rate):
-    """decode(encode) replays the encoder's own predictor track exactly:
-    the encoder commits to the decoded value after each nibble, so the
-    decoder must reproduce that track bit-for-bit (the lossy step is the
-    quantizer, never the reconstruction)."""
-    from nlp_lib_spark.operators.mediacodec import (_ima_decode_nibble,
-                                                    _ima_encode_sample,
-                                                    decode_wav_ima,
-                                                    encode_wav_ima)
-    blob = encode_wav_ima(samples, rate)
-    assert blob[:4] == b"RIFF" and blob[8:12] == b"WAVE"
-    rate2, dec = decode_wav_ima(blob)
-    assert rate2 == rate
-    # replay the encoder's committed predictor values
-    pred, idx = samples[0], 0
-    exp = [pred]
-    for s in samples[1:]:
-        n = _ima_encode_sample(s, pred, idx)
-        pred, idx = _ima_decode_nibble(n, pred, idx)
-        exp.append(pred)
-    # nibble padding to an even byte may append one extra decoded sample
-    assert dec[:len(exp)] == exp and len(dec) - len(exp) <= 1
-
-
-def test_ima_roundtrip_tracks_after_attack():
-    """Quantizer quality: after the step-size attack transient, a +/-12k
-    sine tracks within a small fraction of full scale (the IMA design
-    point); the transient itself may lag (step starts at 7)."""
-    import math
-
-    from nlp_lib_spark.operators.mediacodec import (decode_wav_ima,
-                                                    encode_wav_ima)
-    samples = [int(12000 * math.sin(i / 5)) for i in range(200)]
-    _, dec = decode_wav_ima(encode_wav_ima(samples, 8000))
-    err = [abs(a - b) for a, b in zip(samples, dec)]
-    assert max(err[50:]) < 1500 and sum(err[50:]) / 150 < 400
-
-
-def test_ima_rejects_garbage_and_corrupt_header():
-    from nlp_lib_spark.operators.mediacodec import (build_wav_ima_block,
-                                                    decode_wav_ima)
-    with pytest.raises(ValueError):
-        decode_wav_ima(b"RIFFxxxxAVI LIST")
-    blob = bytearray(build_wav_ima_block(0, 0, [0, 0]))
-    blob[blob.index(b"data") + 8 + 2] = 89  # step index out of range
-    with pytest.raises(ValueError):
-        decode_wav_ima(bytes(blob))
-    with pytest.raises(ValueError):
-        build_wav_ima_block(0, 0, [1, 2, 3])  # odd nibble count
-
-
-def test_ima_synth_matches_oracle_model_and_dispatch():
-    """synth_ima_payload decodes to exactly the md5-driven state-machine
-    model the DuckDB oracle replays, and real_features dispatches the
-    0x0011 fmt tag to the ADPCM path (not the stdlib wave module)."""
-    import hashlib
-
-    from nlp_lib_spark.operators.mediacodec import (_ima_decode_nibble,
-                                                    decode_audio,
-                                                    real_features,
-                                                    synth_ima_payload)
-    text = "the cat sat on the mat"
-    payload = synth_ima_payload(text)
-    assert len(payload) == 80  # the gate oracle's n_bytes constant
-    rate, dec = decode_audio(payload)
-    b = hashlib.md5((text + ":a").encode()).digest()
-    pred, idx = b[0] * 256 + b[1] - 32768, b[2] % 89
-    exp = [pred]
-    for c in hashlib.md5(text.encode()).hexdigest():
-        pred, idx = _ima_decode_nibble(int(c, 16), pred, idx)
-        exp.append(pred)
-    assert (rate, dec) == (8000, exp)
-    feats = real_features(payload)
-    assert feats[:5] == [8000.0, 33.0, float(min(exp)), float(max(exp)),
-                         float(sum(abs(v) for v in exp))]
-    assert feats[5:] == [float(v) for v in exp[:16]]
-
-
-# ------------------------------------------------ progressive JPEG (SOF2)
-
-def test_jpeg_progressive_flat_block_exact_and_dispatch():
-    """The progressive gate payload decodes bit-exactly to the flat-block
-    raster (the property the shared media_features_jpeg oracle relies on),
-    through both the dedicated decoder and the decode_jpeg dispatch."""
-    from nlp_lib_spark.operators.mediacodec import (
-        decode_jpeg, decode_jpeg_progressive, synth_jpeg_prog_payload)
-    text = "progressive gate corpus"
-    blob = synth_jpeg_prog_payload(text)
-    exp = _flat_raster(list(md5_expand(text, 4)))
-    assert decode_jpeg_progressive(blob) == (16, 16, exp)
-    assert decode_jpeg(blob) == (16, 16, exp)  # SOF2 dispatch
-    # structurally progressive: SOF2 marker + four SOS scans
-    assert b"\xff\xc2" in blob and blob.count(b"\xff\xda") == 4
-    assert b"\xff\xc0" not in blob
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.data())
-def test_jpeg_progressive_equals_baseline_decode(data):
-    """Successive approximation transmits every coefficient bit across the
-    first+refinement pass pairs, so progressive decode must EQUAL baseline
-    decode of the same image at the same quantization — on arbitrary
-    images (random / smooth / sparse-spike / near-flat), exercising ZRL,
-    EOB runs spanning blocks, newly-nonzero insertion and correction-bit
-    interleaving in the refinement scan."""
-    from nlp_lib_spark.operators.mediacodec import (
-        decode_jpeg, decode_jpeg_progressive, encode_jpeg,
-        encode_jpeg_progressive)
-    w = 8 * data.draw(st.integers(1, 4))
-    h = 8 * data.draw(st.integers(1, 4))
-    q_dc = data.draw(st.sampled_from([1, 2, 8, 16]))
-    q_ac = data.draw(st.sampled_from([2, 16, 64]))
-    kind = data.draw(st.integers(0, 3))
-    if kind == 0:
-        img = data.draw(st.lists(st.integers(0, 255), min_size=w * h,
-                                 max_size=w * h))
-    elif kind == 1:  # low-amplitude noise: magnitude-0/1 refine paths
-        img = [128 + data.draw(st.integers(-6, 6)) for _ in range(w * h)]
-    elif kind == 2:  # sparse spikes on flat: long zero runs + ZRL
-        img = [128] * (w * h)
-        for _ in range(4):
-            img[data.draw(st.integers(0, w * h - 1))] = data.draw(
-                st.sampled_from([0, 255]))
-    else:  # checkerboard: maximal high-frequency energy
-        img = [255 * ((x + y) & 1) for y in range(h) for x in range(w)]
-    base = decode_jpeg(encode_jpeg(img, w, h, q_dc, q_ac))
-    prog = decode_jpeg_progressive(
-        encode_jpeg_progressive(img, w, h, q_dc, q_ac))
-    assert prog == base
-
-
-def test_jpeg_progressive_rejects_malformed():
-    from nlp_lib_spark.operators.mediacodec import (
-        decode_jpeg_progressive, encode_jpeg_progressive)
-    with pytest.raises(ValueError):
-        decode_jpeg_progressive(b"not a jpeg")
-    good = encode_jpeg_progressive(_flat_raster([9, 8, 7, 6]), 16, 16)
-    # baseline SOF0 handed to the progressive decoder must raise
-    from nlp_lib_spark.operators.mediacodec import encode_jpeg
-    with pytest.raises(ValueError):
-        decode_jpeg_progressive(encode_jpeg(_flat_raster([1, 2, 3, 4]),
-                                            16, 16))
-    # truncating the final scan must raise, not return partial pixels
-    with pytest.raises(ValueError):
-        decode_jpeg_progressive(good[:len(good) // 2])
-    with pytest.raises(ValueError):
-        encode_jpeg_progressive([0] * 12, 4, 3)  # non-multiple-of-8 dims
-
-
-def test_jpeg_progressive_real_features_seam():
-    """real_features dispatches SOF2 payloads through the image path with
-    the same feature layout as the baseline JPEG."""
-    from nlp_lib_spark.operators.mediacodec import (
-        real_features, synth_jpeg_payload, synth_jpeg_prog_payload)
-    text = "seam check"
-    assert (real_features(synth_jpeg_prog_payload(text))
-            == real_features(synth_jpeg_payload(text)))
-
-
-# ------------------------------------------------ G.711 µ-law / A-law WAV
-
-def test_g711_canonical_expansion_points():
-    """Pin the CCITT reference expansions: segment extremes, zero codes,
-    and the sign convention for both laws."""
-    from nlp_lib_spark.operators.mediacodec import (g711_alaw_to_linear,
-                                                    g711_ulaw_to_linear)
-    assert g711_ulaw_to_linear(0x00) == -32124
-    assert g711_ulaw_to_linear(0x80) == 32124
-    assert g711_ulaw_to_linear(0xFF) == 0 == g711_ulaw_to_linear(0x7F)
-    assert g711_alaw_to_linear(0x55) == -8
-    assert g711_alaw_to_linear(0xD5) == 8
-    assert g711_alaw_to_linear(0x2A) == -32256
-    assert g711_alaw_to_linear(0xAA) == 32256
-
-
-def test_g711_code_idempotence_and_full_table_roundtrip():
-    """encode(decode(code)) == code for every one of the 256 codes of
-    both laws (expansions are unique per law except the µ-law ±0 pair,
-    where the tie rule picks the smaller code deterministically)."""
-    from nlp_lib_spark.operators.mediacodec import (_g711_table,
-                                                    decode_wav_g711,
-                                                    encode_wav_g711)
-    for law in ("ulaw", "alaw"):
-        tab = _g711_table(law)
-        wav = encode_wav_g711(tab, law)
-        rate, dec = decode_wav_g711(wav)
-        assert (rate, dec) == (8000, tab)
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.integers(-32768, 32767), min_size=1, max_size=64),
-       st.sampled_from(["ulaw", "alaw"]))
-def test_g711_roundtrip_quantization_bound(samples, law):
-    """Companding error is bounded by half the top segment's step (the
-    optimal quantizer picks the nearest codeword)."""
-    from nlp_lib_spark.operators.mediacodec import (decode_audio,
-                                                    encode_wav_g711)
-    rate, dec = decode_audio(encode_wav_g711(samples, law))
-    assert rate == 8000 and len(dec) == len(samples)
-    bound = 512 if law == "alaw" else 1024  # half of the top-segment step
-    for s, d in zip(samples, dec):
-        # clipping at the code range extremes dominates near ±32767
-        lim = 32256 if law == "alaw" else 32124
-        if abs(s) > lim:
-            assert abs(d) == lim and (s >= 0) == (d >= 0)
-        else:
-            assert abs(s - d) <= bound, (s, d)
-
-
-def test_g711_rejects_garbage_and_wrong_layout():
-    from nlp_lib_spark.operators.mediacodec import (build_wav_g711,
-                                                    decode_wav_g711,
-                                                    encode_wav)
-    with pytest.raises(ValueError):
-        decode_wav_g711(b"not a wav")
-    with pytest.raises(ValueError):
-        decode_wav_g711(encode_wav([0, 1, 2]))  # PCM16 fmt tag
-    good = build_wav_g711(bytes(range(32)), "ulaw")
-    bad = good.replace(b"data", b"datx")
-    with pytest.raises(ValueError):
-        decode_wav_g711(bad)
-
-
-def test_g711_synth_matches_oracle_model_and_dispatch():
-    """synth_g711_payload decodes to the closed-form table lookups over
-    md5_expand bytes — the property the gate oracle recomputes in SQL —
-    and real_features dispatches it through the audio path."""
-    from nlp_lib_spark.operators.mediacodec import (_g711_table,
-                                                    decode_audio,
-                                                    real_features,
-                                                    synth_g711_payload)
-    text = "the quick brown fox"
-    for did, law in ((0, "ulaw"), (1, "alaw")):
-        payload = synth_g711_payload(did, text)
-        assert len(payload) == 90  # the gate oracle's n_bytes constant
-        rate, dec = decode_audio(payload)
-        exp = [_g711_table(law)[b] for b in md5_expand(text, 32)]
-        assert (rate, dec) == (8000, exp)
-        feats = real_features(payload)
-        assert feats[:5] == [8000.0, 32.0, float(min(exp)), float(max(exp)),
-                             float(sum(abs(v) for v in exp))]
-        assert feats[5:] == [float(v) for v in exp[:16]]
-
-
-# --------------------------------------------------------------- GIF (LZW)
-
-@settings(max_examples=60, deadline=None)
-@given(st.integers(1, 13), st.integers(1, 11), st.booleans(), st.data())
-def test_gif_roundtrip_any_dims(w, h, interlaced, data):
-    # h >= 5 with interlaced=True exercises all four interlace passes
-    from nlp_lib_spark.operators.mediacodec import decode_gif, encode_gif
-    gray = data.draw(st.lists(st.integers(0, 255), min_size=w * h,
-                              max_size=w * h))
-    blob = encode_gif(gray, w, h, interlaced=interlaced)
-    assert blob[:6] == b"GIF89a" and blob[-1] == 0x3B
-    assert decode_gif(blob) == (w, h, gray)
-
-
-def test_gif_lzw_width_growth_and_table_reset_roundtrip():
-    """30k random indices force 9->10->11->12-bit code growth and a full
-    4096-entry table reset; the low-entropy tail stresses KwKwK chains.
-    Also proves the deferred-clear stream shape (spec-legal: the encoder
-    freezes the full table instead of clearing) decodes identically."""
-    import random
-
-    from nlp_lib_spark.operators.mediacodec import (_gif_lzw_compress,
-                                                    _gif_lzw_decompress)
-    rng = random.Random(31337)
-    seq = ([rng.randrange(256) for _ in range(30000)]
-           + [5, 9] * 2000 + [5] * 1000)
-    for defer in (False, True):
-        blob = _gif_lzw_compress(seq, 8, defer_clear=defer)
-        assert _gif_lzw_decompress(blob, 8) == seq
-    for mcs in (2, 3, 4):  # small-palette widths start below 9 bits
-        small = [rng.randrange(1 << mcs) for _ in range(8000)]
-        assert _gif_lzw_decompress(
-            _gif_lzw_compress(small, mcs), mcs) == small
-
-
-def test_gif_rejects_garbage_and_truncation():
-    from nlp_lib_spark.operators.mediacodec import decode_gif, encode_gif
-    with pytest.raises(ValueError):
-        decode_gif(b"NOTAGIF")
-    with pytest.raises(ValueError):
-        decode_gif(b"GIF88a" + b"\x00" * 20)
-    blob = encode_gif(list(range(16)), 4, 4)
-    with pytest.raises(ValueError):
-        decode_gif(blob[:20] + b"\x3b")  # trailer before any image
-    # corrupt LZW: an undefined code past the assigned range
-    body = bytearray(blob)
-    body[-4] ^= 0xFF
-    with pytest.raises(ValueError):
-        decode_gif(bytes(body))
-
-
-def test_gif_synth_matches_oracle_model_and_dispatch():
-    """synth_gif_payload (interlaced for odd-length text) decodes back to
-    the md5_expand raster — the closed-form property the media_features_gif
-    oracle recomputes in SQL — and dispatches through decode_image and
-    real_features."""
-    from nlp_lib_spark.operators.mediacodec import (GIF_DIM, decode_image,
-                                                    synth_gif_payload)
-    for text in ("hello", "four"):  # odd -> interlaced, even -> sequential
-        payload = synth_gif_payload(text)
-        exp = list(md5_expand(text, GIF_DIM * GIF_DIM))
-        assert decode_image(payload) == (GIF_DIM, GIF_DIM, exp)
-        feats = real_features(payload)
-        assert feats[:5] == [8.0, 8.0, float(min(exp)), float(max(exp)),
-                             float(sum(exp))]
-        # 4x4 nearest-neighbor resize of the 8x8 raster
-        assert feats[5:] == [float(exp[(t // 4) * 16 + (t % 4) * 2])
-                             for t in range(16)]
-
-
-def test_gif_conformance_against_system_giflib():
-    """Cross-implementation conformance: encode_gif streams decode
-    pixel-exactly under the SYSTEM giflib (the reference C decoder),
-    including interlaced layout and >4096-entry streams that cross every
-    code-width boundary and a table clear; and decode_gif exactly decodes
-    giflib-ENCODED files (foreign LZW emission order)."""
-    import random
-
-    from tests.giflib_ref import (AVAILABLE, giflib_decode_gray,
-                                  giflib_encode_gray)
-
-    from nlp_lib_spark.operators.mediacodec import decode_gif, encode_gif
-    if not AVAILABLE:
-        pytest.skip("system giflib not present")
-    rng = random.Random(99)
-    big = [rng.randrange(256) for _ in range(150 * 200)]
-    for name, px, w, h, il in [
-        ("seq", big, 150, 200, False),
-        ("int", big, 150, 200, True),
-        ("runs", (([5] * 997 + [9] * 1003) * 6)[:100 * 120], 100, 120,
-         False),
-    ]:
-        path = f"/tmp/test_gifref_{name}.gif"
-        with open(path, "wb") as f:
-            f.write(encode_gif(px, w, h, interlaced=il))
-        assert giflib_decode_gray(path) == (w, h, px), name
-    foreign = "/tmp/test_gifref_foreign.gif"
-    giflib_encode_gray(foreign, big, 150, 200)
-    with open(foreign, "rb") as f:
-        assert decode_gif(f.read()) == (150, 200, big)
-
-
-# ------------------------------------------------------------- MS ADPCM
-
-def _ms_spec_decode_block(pred_idx, delta, s1, s2, nibbles):
-    """Independent literal transliteration of the MS 'Multimedia Data
-    Standards Update' ADPCM decode pseudocode (float division + trunc =
-    the C signed-division semantics), kept deliberately different in
-    shape from mediacodec's integer form."""
-    import math
-
-    from nlp_lib_spark.operators.mediacodec import (MS_ADAPT, MS_COEF1,
-                                                    MS_COEF2)
-    c1, c2 = MS_COEF1[pred_idx], MS_COEF2[pred_idx]
-    out = [s2, s1]
-    for n in nibbles:
-        lPredSample = int(math.trunc((s1 * c1 + s2 * c2) / 256))
-        iErrorDelta = n - 16 if n & 8 else n
-        lNewSample = lPredSample + delta * iErrorDelta
-        lNewSample = max(-32768, min(32767, lNewSample))
-        delta = int(math.trunc(delta * MS_ADAPT[n] / 256))
-        if delta < 16:
-            delta = 16
-        s2, s1 = s1, lNewSample
-        out.append(lNewSample)
-    return out
-
-
-@settings(max_examples=120, deadline=None)
-@given(st.integers(0, 6), st.integers(16, 16000),
-       st.integers(-32768, 32767), st.integers(-32768, 32767), st.data())
-def test_msadpcm_decoder_matches_spec_transliteration(pred_idx, delta,
-                                                      s1, s2, data):
-    from nlp_lib_spark.operators.mediacodec import (
-        build_wav_msadpcm_block, decode_wav_msadpcm)
-    nibbles = data.draw(st.lists(st.integers(0, 15), min_size=2,
-                                 max_size=60).filter(
-                                     lambda v: len(v) % 2 == 0))
-    blob = build_wav_msadpcm_block(pred_idx, delta, s1, s2, nibbles)
-    assert decode_wav_msadpcm(blob) == (
-        8000, _ms_spec_decode_block(pred_idx, delta, s1, s2, nibbles))
-
-
-def test_msadpcm_roundtrip_tracks_smooth_signal():
-    """Encoder fidelity: decode(encode(x)) tracks a +/-15k two-tone sine
-    within a small fraction of peak (the two-tap predictor's design
-    point), and the blob is a well-formed single-block WAV."""
-    import math
-
-    from nlp_lib_spark.operators.mediacodec import (decode_wav_msadpcm,
-                                                    encode_wav_msadpcm)
-    sig = [int(12000 * math.sin(i / 9) + 3000 * math.sin(i / 3))
-           for i in range(400)]
-    blob = encode_wav_msadpcm(sig)
-    assert blob[:4] == b"RIFF" and blob[8:12] == b"WAVE"
-    rate, dec = decode_wav_msadpcm(blob)
-    assert rate == 8000 and dec[:2] == sig[:2]
-    err = sum(abs(a - b) for a, b in zip(sig, dec)) / len(sig)
-    assert err / max(abs(v) for v in sig) < 0.05
-
-
-def test_msadpcm_multi_block_state_resets():
-    """Two concatenated blocks decode independently: block 2's samples
-    equal a fresh single-block decode of the same header+nibbles."""
-    import struct
-
-    from nlp_lib_spark.operators.mediacodec import (
-        build_wav_msadpcm_block, decode_wav_msadpcm)
-    b1 = build_wav_msadpcm_block(1, 500, 1000, -1000, [7, 8, 15, 0])
-    b2 = build_wav_msadpcm_block(4, 64, -99, 99, [1, 2, 3, 4])
-    # splice block 2's data block after file 1's (same block_align)
-    d1 = b1[b1.index(b"data") + 8:]
-    d2 = b2[b2.index(b"data") + 8:]
-    merged_file = bytearray(
-        b1[:b1.index(b"data")] + b"data"
-        + struct.pack("<I", len(d1) + len(d2)) + d1 + d2)
-    merged_file[4:8] = struct.pack("<I", len(merged_file) - 8)
-    _, merged = decode_wav_msadpcm(bytes(merged_file))
-    _, solo1 = decode_wav_msadpcm(b1)
-    _, solo2 = decode_wav_msadpcm(b2)
-    assert merged == solo1 + solo2
-
-
-def test_msadpcm_rejects_garbage_and_corrupt_header():
-    from nlp_lib_spark.operators.mediacodec import (
-        build_wav_msadpcm_block, decode_wav_msadpcm)
-    with pytest.raises(ValueError):
-        decode_wav_msadpcm(b"RIFFxxxxAVI LIST")
-    with pytest.raises(ValueError):
-        build_wav_msadpcm_block(7, 16, 0, 0, [0, 0])  # predictor > 6
-    with pytest.raises(ValueError):
-        build_wav_msadpcm_block(0, 16, 0, 0, [1, 2, 3])  # odd nibbles
-    blob = bytearray(build_wav_msadpcm_block(0, 16, 0, 0, [0, 0]))
-    blob[blob.index(b"data") + 8] = 9  # block predictor index past table
-    with pytest.raises(ValueError):
-        decode_wav_msadpcm(bytes(blob))
-
-
-def test_msadpcm_synth_matches_oracle_model_and_dispatch():
-    """synth_msadpcm_payload decodes to exactly the md5-driven two-tap
-    machine the DuckDB oracle replays, and decode_audio/real_features
-    dispatch the 0x0002 fmt tag to the MS-ADPCM path."""
-    import hashlib
-
-    from nlp_lib_spark.operators.mediacodec import (_ms_decode_nibble,
-                                                    MS_COEF1, MS_COEF2,
-                                                    decode_audio,
-                                                    real_features,
-                                                    synth_msadpcm_payload)
-    text = "the cat sat on the mat"
-    payload = synth_msadpcm_payload(text)
-    assert len(payload) == 113  # the gate oracle's n_bytes constant
-    rate, dec = decode_audio(payload)
-    b = hashlib.md5((text + ":m").encode()).digest()
-    c1, c2 = MS_COEF1[b[0] % 7], MS_COEF2[b[0] % 7]
-    delta = 16 + (b[1] * 256 + b[2]) % 30000
-    s1 = b[3] * 256 + b[4] - 32768
-    s2 = b[5] * 256 + b[6] - 32768
-    exp = [s2, s1]
-    for c in hashlib.md5(text.encode()).hexdigest():
-        pred, delta = _ms_decode_nibble(int(c, 16), s1, s2, delta, c1, c2)
-        s2, s1 = s1, pred
-        exp.append(pred)
-    assert (rate, dec) == (8000, exp)
-    feats = real_features(payload)
-    assert feats[:5] == [8000.0, 34.0, float(min(exp)), float(max(exp)),
-                         float(sum(abs(v) for v in exp))]
-    assert feats[5:] == [float(v) for v in exp[:16]]
-
-
-# ------------------------------------------------------- animated GIF
-
-@settings(max_examples=40, deadline=None)
-@given(st.integers(1, 10), st.integers(1, 9), st.integers(1, 5), st.data())
-def test_gif_anim_roundtrip(w, h, n_frames, data):
-    from nlp_lib_spark.operators.mediacodec import (decode_gif_anim,
-                                                    encode_gif_anim)
-    frames = [data.draw(st.lists(st.integers(0, 255), min_size=w * h,
-                                 max_size=w * h)) for _ in range(n_frames)]
-    blob = encode_gif_anim(frames, w, h)
-    assert blob[:6] == b"GIF89a" and b"NETSCAPE2.0" in blob
-    assert decode_gif_anim(blob) == (w, h, frames)
-
-
-def test_gif_anim_rejects_partial_frames_and_garbage():
-    import struct
-
-    from nlp_lib_spark.operators.mediacodec import (decode_gif_anim,
-                                                    encode_gif, encode_gif_anim)
-    with pytest.raises(ValueError):
-        decode_gif_anim(b"NOTAGIF")
-    with pytest.raises(ValueError):
-        encode_gif_anim([], 4, 4)
-    # a partial frame (image smaller than the logical screen) must raise,
-    # not decode wrong pixels: widen the screen of a 4x4 single-frame GIF
-    blob = bytearray(encode_gif(list(range(16)), 4, 4))
-    blob[6:8] = struct.pack("<H", 8)  # screen width 8, image still 4x4
-    with pytest.raises(ValueError):
-        decode_gif_anim(bytes(blob))
-
-
-def test_gif_anim_synth_matches_oracle_model_and_frame_sample():
-    """synth_gif_anim_payload demuxes back to the per-frame md5_expand
-    rasters — the closed-form property the media_frames_gif oracle
-    recomputes in SQL — and frame_features samples every 2nd frame with
-    the image feature contract."""
-    from nlp_lib_spark.operators.mediacodec import (GIF_ANIM_FRAMES,
-                                                    GIF_DIM,
-                                                    decode_gif_anim,
-                                                    frame_features,
-                                                    synth_gif_anim_payload)
-    text = "animated gate corpus"
-    payload = synth_gif_anim_payload(text)
-    exp = [list(md5_expand(f"{text}#g{k}", GIF_DIM * GIF_DIM))
-           for k in range(GIF_ANIM_FRAMES)]
-    assert decode_gif_anim(payload) == (GIF_DIM, GIF_DIM, exp)
-    ff = frame_features(payload, every_n=2)
-    assert [k for k, _ in ff] == [0, 2]
-    for k, feats in ff:
-        g = exp[k]
-        assert feats[:5] == [8.0, 8.0, float(min(g)), float(max(g)),
-                             float(sum(g))]
-        assert feats[5:] == [float(g[(i // 4) * 16 + (i % 4) * 2])
-                             for i in range(16)]
-
-
-def test_gif_anim_conformance_against_system_giflib():
-    """Multi-frame cross-implementation conformance: encode_gif_anim
-    streams (with app-extension chain + per-frame interlace) decode
-    frame-exactly under the SYSTEM giflib, and giflib-ENCODED multi-image
-    files decode exactly under decode_gif_anim."""
-    import random
-
-    from tests.giflib_ref import (AVAILABLE, giflib_decode_gray_frames,
-                                  giflib_encode_gray_frames)
-
-    from nlp_lib_spark.operators.mediacodec import (decode_gif_anim,
-                                                    encode_gif_anim)
-    if not AVAILABLE:
-        pytest.skip("system giflib not present")
-    rng = random.Random(41)
-    frames = [[rng.randrange(256) for _ in range(60 * 44)]
-              for _ in range(5)]
-    path = "/tmp/test_gifanim_ours.gif"
-    with open(path, "wb") as f:
-        f.write(encode_gif_anim(frames, 60, 44))
-    assert giflib_decode_gray_frames(path) == (60, 44, frames)
-    foreign = "/tmp/test_gifanim_foreign.gif"
-    giflib_encode_gray_frames(foreign, frames, 60, 44)
-    with open(foreign, "rb") as f:
-        assert decode_gif_anim(f.read()) == (60, 44, frames)
 
 
 # ---------------------------------------------------------- BI_RLE8 BMP
@@ -978,12 +340,12 @@ def test_rle8_uncompressed_8bpp_and_rejects():
 
 
 def test_rle8_synth_matches_oracle_model_and_dispatch():
-    from nlp_lib_spark.operators.mediacodec import (GIF_DIM, decode_image,
+    from nlp_lib_spark.operators.mediacodec import (PNG_DIM, decode_image,
                                                     synth_rle8_payload)
     for text in ("hello", "x"):
         payload = synth_rle8_payload(text)
-        exp = list(md5_expand(text, GIF_DIM * GIF_DIM))
-        assert decode_image(payload) == (GIF_DIM, GIF_DIM, exp)
+        exp = list(md5_expand(text, PNG_DIM * PNG_DIM))
+        assert decode_image(payload) == (PNG_DIM, PNG_DIM, exp)
         feats = real_features(payload)
         assert feats[:5] == [8.0, 8.0, float(min(exp)), float(max(exp)),
                              float(sum(exp))]
