@@ -24,6 +24,7 @@ from nlp_lib_spark.lexicons import TESTDATA_CONFIG
 from nlp_lib_spark.operators.dedup import SEMDEDUP_N_CENTROIDS
 from nlp_lib_spark.operators.extract import (annotate_turns, extract_triples,
                                              mentions_from_annotations)
+from nlp_lib_spark.operators.linking import dictionary_frame
 from nlp_lib_spark.operators.viewsql import sql_over
 from nlp_lib_spark.operators.transcripts import (transcripts,
                                                  transcripts_select_sql)
@@ -3429,8 +3430,7 @@ def q_kg_link_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nlp_lib_spark.lexicons import TESTDATA_ENTITIES
     from nlp_lib_spark.operators.linking import link_mentions
     mentions = mentions_from_annotations(_ann(spark, sf_dir))
-    dictionary = spark.createDataFrame(
-        [(e,) for e in sorted(set(TESTDATA_ENTITIES))], "entity string")
+    dictionary = dictionary_frame(spark, sorted(set(TESTDATA_ENTITIES)))
     return (link_mentions(mentions, dictionary)
             .select("norm", "entity", "method",
                     F.round("score", 4).cast("double").alias("score"))
@@ -3550,8 +3550,7 @@ def q_kg_link_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .alias("mention_text"))
                 .filter(F.expr(_NORM % "mention_text") != "")
                 .distinct())
-    dictionary = spark.createDataFrame(
-        [(e,) for e in sorted(set(TESTDATA_ENTITIES))], "entity string")
+    dictionary = dictionary_frame(spark, sorted(set(TESTDATA_ENTITIES)))
     return link_mentions_tfidf(mentions, dictionary)
 
 
@@ -3575,8 +3574,7 @@ def q_kg_link_tfidf_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .alias("mention_text"))
                 .filter(F.expr(_NORM % "mention_text") != "")
                 .distinct())
-    dictionary = spark.createDataFrame(
-        [(e,) for e in sorted(set(TESTDATA_ENTITIES))], "entity string")
+    dictionary = dictionary_frame(spark, sorted(set(TESTDATA_ENTITIES)))
     return link_mentions_tfidf_distributed(mentions, dictionary)
 
 
@@ -3624,8 +3622,7 @@ def q_kg_vocab_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .alias("mention_text"))
                 .filter(F.expr(_NORM % "mention_text") != "")
                 .distinct())
-    dictionary = spark.createDataFrame(
-        [(e,) for e in sorted(set(TESTDATA_ENTITIES))], "entity string")
+    dictionary = dictionary_frame(spark, sorted(set(TESTDATA_ENTITIES)))
     linked = link_mentions_tfidf(mentions, dictionary).localCheckpoint()
     edges = link_edges_for_cc(linked)
     verts = (linked.select(F.col("norm").alias("id"))
@@ -3667,8 +3664,7 @@ def q_kg_entity_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nlp_lib_spark.lexicons import TESTDATA_ENTITIES
     from nlp_lib_spark.operators.graph import canonical_map
     mentions = mentions_from_annotations(_ann(spark, sf_dir))
-    dictionary = spark.createDataFrame(
-        [(e,) for e in TESTDATA_ENTITIES], "entity string")
+    dictionary = dictionary_frame(spark, TESTDATA_ENTITIES)
     return canonical_map(mentions, dictionary)
 
 
@@ -3682,8 +3678,7 @@ def _graph_tables(spark: SparkSession, sf_dir: str
     # the dominant cost; localCheckpoint materializes it exactly once)
     ann = annotate_turns(t, TESTDATA_CONFIG).localCheckpoint()
     mentions = mentions_from_annotations(ann)
-    dictionary = spark.createDataFrame(
-        [(e,) for e in TESTDATA_ENTITIES], "entity string")
+    dictionary = dictionary_frame(spark, TESTDATA_ENTITIES)
     cmap = canonical_map(mentions, dictionary)
     return materialize_graph(triples_from_annotations(ann), cmap)
 

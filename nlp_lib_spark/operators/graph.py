@@ -11,49 +11,34 @@ shuffle is the final edge aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
-from nlp_lib_spark.operators.linking import link_mentions
+from nlp_lib_spark.operators.linking import link_norms, normalize_mentions
 
 
 def canonical_map(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
     """mention norm -> canonical entity id (component min-label).
 
-    The mention-similarity graph produced by :func:`link_mentions` is a
-    bipartite STAR FOREST by construction, so the general iterative CC
-    (operators/canonicalize.py — still used by the cc_components /
-    kg_vocab_canon paths, whose graphs are arbitrary) is unnecessary
-    here and is replaced by one closed-form aggregation:
-
-    * each norm carries exactly ONE verdict edge (the exact tier joins
-      the canonicalized dictionary — one entity per entity_norm — and
-      the fuzzy tier keeps only the row_number()==1 candidate);
-    * entities never interlink: an entity string that occurs as a
-      mention norm is already in normalized form, so it exact-matches
-      its own entity_norm and yields only a self-loop.
-
-    Hence every component is {entity} ∪ norms(entity) and the min-label
-    is ``least(entity, min(norm))`` — one groupBy + one broadcast join
-    instead of local contraction + star rounds + per-round signature
-    probes. Both consumers (kg_entity_links, kg_edges) carry full
-    transitive-closure DuckDB oracles, so this closed form is value-hash
-    verified against the general-CC semantics on every parity/fuzz run.
+    The mention-similarity graph of the :func:`link_norms` verdicts is a
+    bipartite STAR FOREST by construction: each norm carries exactly ONE
+    verdict edge, and entities never interlink (an entity string that
+    occurs as a mention norm is already normalized, so it exact-matches
+    its own entity_norm — a self-loop).  So the general iterative CC
+    (operators/canonicalize.py, still used by cc_components /
+    kg_vocab_canon, whose graphs are arbitrary) is replaced by one
+    window over the per-norm verdicts: every component is {entity} ∪
+    norms(entity), labelled ``least(entity, min(linked norm))``.  Both
+    consumers (kg_entity_links, kg_edges) carry full transitive-closure
+    DuckDB oracles, so the closed form is value-hash verified against the
+    general-CC semantics on every parity/fuzz run.
     """
-    linked = link_mentions(mentions, dictionary)
-    # one verdict row per distinct norm; checkpointed because it feeds
-    # both the label aggregate and the final join (and the upstream
-    # Arrow annotation chain must run exactly once)
-    verdicts = (linked.select("norm", "entity", "method", "score")
-                .distinct().localCheckpoint())
-    labels = (verdicts.filter(F.col("method") != "unlinked")
-              .groupBy("entity").agg(F.min("norm").alias("mn"))
-              .select("entity", F.least("entity", "mn").alias("component")))
-    # unlinked rows have entity == norm and no label row: coalesce to the
-    # norm itself (its own singleton component)
-    return (verdicts.join(F.broadcast(labels), "entity", "left")
-            .select("norm",
-                    F.coalesce("component", "norm").alias("entity_id"),
-                    "method", "score"))
+    verdicts = link_norms(normalize_mentions(mentions), dictionary)
+    linked = F.min(F.when(F.col("method") != "unlinked", F.col("norm")))
+    # least() skips a null label: an unlinked norm (entity == norm) is
+    # its own singleton component
+    label = F.least("entity", linked.over(Window.partitionBy("entity")))
+    return verdicts.select("norm", F.coalesce(label, "norm").alias("entity_id"),
+                           "method", "score")
 
 
 def materialize_graph(triples: DataFrame, cmap: DataFrame

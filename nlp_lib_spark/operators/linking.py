@@ -1,23 +1,27 @@
-"""Entity linking: broadcast dictionary join + n-gram Jaccard scoring.
+"""Entity linking: one verdict per distinct norm, exact tier first.
 
 North-rule stage (SURVEY.md §2.9). Matching semantics extend the
 reference's gazetteer (lowercase, exact membership) with a fuzzy tier:
 
-1. exact tier — normalize(mention) equi-joined against the broadcast
-   dictionary (never shuffle the dictionary);
-2. fuzzy tier — unmatched mentions explode into character 3-grams, join a
-   3-gram inverted index of the dictionary (blocking), then score
+1. exact tier — the norms left-join the broadcast dictionary on
+   normalize(entity); one groupBy(norm) dedupes them and keeps the min
+   raw entity of colliding entries ('US'/'us');
+2. fuzzy tier, planned only for norms the exact tier left — 3-grams join
+   a 3-gram inverted index of the dictionary (blocking), then score
    Jaccard = |inter| / (|A| + |B| - |inter|) and keep the best candidate
    above ``threshold`` (deterministic tiebreak: higher score, then
-   lexicographically smaller entity).
+   lexicographically smaller entity); the rest are ``unlinked``.
 
-Everything is built-in DataFrame ops — the n-gram generation is a JVM-side
-``transform(sequence(...))`` expression, not a Python UDF.
+Everything is built-in DataFrame ops over a JVM-local dictionary — the
+n-gram generation is a ``transform(sequence(...))`` expression, not a UDF.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from collections.abc import Iterable
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 _NORM = "trim(regexp_replace(lower(%s), '\\\\s+', ' '))"
 
@@ -26,6 +30,14 @@ _NORM = "trim(regexp_replace(lower(%s), '\\\\s+', ' '))"
 # chars is tens of MB collected — comfortably driver-sized; beyond that,
 # use a distributed IDF (see the error message in link_mentions_tfidf).
 MAX_DICT_ENTITIES = 1_000_000
+
+
+def dictionary_frame(spark: SparkSession,
+                     entities: Iterable[str]) -> DataFrame:
+    """``dictionary(entity)`` built from Arrow: a JVM-local ``LocalRelation``
+    (a list-built frame is a Python RDD that forks Python tasks per read)."""
+    return spark.createDataFrame(
+        pa.table({"entity": pa.array(list(entities), pa.string())}))
 
 
 def _grams_expr(col: str) -> str:
@@ -42,12 +54,8 @@ def normalize_mentions(mentions: DataFrame,
 
 
 def _canonical_dictionary(dictionary: DataFrame) -> DataFrame:
-    """One entity per NORMALIZED surface form, min-entity tiebreak.
-
-    Two raw dictionary entries that normalize identically (e.g. 'US' /
-    'us') would otherwise both join in the exact tier and emit duplicate
-    verdicts for one mention norm — violating the one-verdict-per-norm
-    contract the fuzzy tier enforces with its row_number tiebreak."""
+    """One entity per NORMALIZED surface form, min-entity tiebreak, so
+    colliding raw entries ('US'/'us') yield one verdict per norm."""
     return (dictionary
             .withColumn("entity_norm", F.expr(_NORM % "entity"))
             .groupBy("entity_norm")
@@ -55,35 +63,31 @@ def _canonical_dictionary(dictionary: DataFrame) -> DataFrame:
             .select("entity", "entity_norm"))
 
 
-def link_mentions(mentions: DataFrame, dictionary: DataFrame,
-                  threshold: float = 0.5) -> DataFrame:
-    """mentions(..., mention_text) x dictionary(entity) -> +entity, method, score.
-
-    ``dictionary`` has one column ``entity`` (canonical surface form).
-    """
-    # the mention frame is consumed by three+ plans (exact join, the
-    # isEmpty probe, the anti-join, gram explode); localCheckpoint so an
-    # expensive upstream (the Arrow annotation chain) runs exactly once
-    m = normalize_mentions(mentions).localCheckpoint()
-    d = _canonical_dictionary(dictionary)
-
-    exact = (m.join(F.broadcast(d), m.norm == d.entity_norm)
-             .withColumn("method", F.lit("exact"))
-             .withColumn("score", F.lit(1.0))
-             .drop("entity_norm"))
-
-    unmatched = m.join(F.broadcast(d),
-                       m.norm == d.entity_norm, "left_anti")
-    # no isEmpty() short-circuit: the probe costs a full job every call;
-    # when nothing is unmatched the fuzzy branch plans are near-free
-    mg = unmatched.withColumn("grams", F.expr(_grams_expr("norm"))) \
-                  .withColumn("n_a", F.size("grams"))
-    dg = (d.withColumn("grams", F.expr(_grams_expr("entity_norm")))
-          .withColumn("n_b", F.size("grams"))
-          .select("entity", "entity_norm", "n_b",
+def link_norms(norms: DataFrame, dictionary: DataFrame,
+               threshold: float = 0.5) -> DataFrame:
+    """norms(norm) x dictionary(entity) -> one (norm, entity, method, score)
+    verdict per distinct norm; unlinked: entity = norm, score 0.0."""
+    d = dictionary.withColumn("entity_norm", F.expr(_NORM % "entity"))
+    # checkpointed: the probe, the verdicts and the fuzzy tier all read it
+    exact = (norms.select("norm")
+             .join(F.broadcast(d), F.col("norm") == d.entity_norm, "left")
+             .groupBy("norm").agg(F.min("entity").alias("entity"))
+             .localCheckpoint())
+    verdicts = (exact.filter(F.col("entity").isNotNull())
+                .select("norm", "entity", F.lit("exact").alias("method"),
+                        F.lit(1.0).alias("score")))
+    unmatched = exact.filter(F.col("entity").isNull()).select("norm")
+    # a one-task probe; the fuzzy plan it skips ran several jobs over
+    # zero rows whenever every norm matched exactly (kg_build's cmap)
+    if unmatched.isEmpty():
+        return verdicts
+    dg = (_canonical_dictionary(dictionary)
+          .withColumn("grams", F.expr(_grams_expr("entity_norm")))
+          .select("entity", F.size("grams").alias("n_b"),
                   F.explode("grams").alias("gram")))
-    cand = (mg.select("norm", "n_a", F.explode("grams").alias("gram"))
-            .distinct()
+    cand = (unmatched.withColumn("grams", F.expr(_grams_expr("norm")))
+            .select("norm", F.size("grams").alias("n_a"),
+                    F.explode("grams").alias("gram"))
             .join(F.broadcast(dg), "gram")
             .groupBy("norm", "n_a", "entity", "n_b")
             .agg(F.count(F.lit(1)).alias("inter"))
@@ -93,15 +97,26 @@ def link_mentions(mentions: DataFrame, dictionary: DataFrame,
     w = Window.partitionBy("norm").orderBy(F.desc("score"), F.asc("entity"))
     best = (cand.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") == 1)
-            .select("norm", "entity", "score"))
-    fuzzy = (unmatched.join(best, "norm", "inner")
-             .withColumn("method", F.lit("jaccard3")))
-    missing = (unmatched.join(best, "norm", "left_anti")
-               .withColumn("entity", F.col("norm"))
-               .withColumn("score", F.lit(0.0))
-               .withColumn("method", F.lit("unlinked")))
-    cols = exact.columns
-    return exact.select(cols).union(fuzzy.select(cols)).union(missing.select(cols))
+            .select("norm", F.col("entity").alias("best"),
+                    F.col("score").alias("best_score")))
+    # one left join yields both the jaccard3 and the unlinked rows
+    fuzzy = (unmatched.join(best, "norm", "left")
+             .select("norm", F.coalesce("best", "norm").alias("entity"),
+                     F.when(F.col("best").isNull(), "unlinked")
+                      .otherwise("jaccard3").alias("method"),
+                     F.coalesce("best_score", F.lit(0.0)).alias("score")))
+    return verdicts.unionByName(fuzzy)
+
+
+def link_mentions(mentions: DataFrame, dictionary: DataFrame,
+                  threshold: float = 0.5) -> DataFrame:
+    """mentions(..., mention_text) x dictionary(entity) -> +norm, entity,
+    method, score: one row per mention (its norm's link_norms verdict)."""
+    # read twice (verdicts, join back): the upstream chain runs once
+    m = normalize_mentions(mentions).localCheckpoint()
+    v = link_norms(m, dictionary, threshold).withColumnRenamed("norm", "vn")
+    # null-safe, so a null mention_text keeps its (unlinked) row
+    return m.join(v, m.norm.eqNullSafe(v.vn)).drop("vn")
 
 
 def _py_grams(s: str) -> list[str]:
@@ -188,8 +203,8 @@ def link_mentions_tfidf(mentions: DataFrame, dictionary: DataFrame,
             f"instead of injecting driver-side literals.")
     ents = tuple(r.entity_norm for r in probe)
     weights, w_oov = gram_idf_weights(ents)
-    wdf = spark.createDataFrame(sorted(weights.items()),
-                                "gram string, w long")
+    wdf = spark.createDataFrame(pa.table(
+        {"gram": list(weights), "w": pa.array(weights.values(), pa.int64())}))
 
     exact = (m.join(F.broadcast(d), m.norm == d.entity_norm)
              .select("norm", "entity",

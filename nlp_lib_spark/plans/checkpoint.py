@@ -262,6 +262,7 @@ def full_kg_stages(sf_dir: str, config, dictionary: tuple[str, ...],
                                                    hor_edges)
     from nlp_lib_spark.operators.extract import mentions_from_annotations
     from nlp_lib_spark.operators.graph import canonical_map, materialize_graph
+    from nlp_lib_spark.operators.linking import dictionary_frame
 
     graph: dict = {}
 
@@ -273,9 +274,7 @@ def full_kg_stages(sf_dir: str, config, dictionary: tuple[str, ...],
 
     def s_cmap(spark, outs):
         mentions = mentions_from_annotations(outs["annotations"])
-        ddf = spark.createDataFrame([(e,) for e in dictionary],
-                                    "entity string")
-        return canonical_map(mentions, ddf)
+        return canonical_map(mentions, dictionary_frame(spark, dictionary))
 
     def built(spark, outs):
         # one materialize_graph per (triples, cmap) pair: nodes and edges

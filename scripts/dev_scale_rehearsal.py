@@ -78,6 +78,7 @@ def run_kg_edges(spark, reps: int) -> dict:
                                                  mentions_from_annotations,
                                                  triples_from_annotations)
     from nlp_lib_spark.operators.graph import canonical_map, materialize_graph
+    from nlp_lib_spark.operators.linking import dictionary_frame
     from nlp_lib_spark.operators.transcripts import transcripts_select_sql
     from nlp_lib_spark.operators.viewsql import sql_over
     docs = replicate_docs(spark, reps)
@@ -88,8 +89,7 @@ def run_kg_edges(spark, reps: int) -> dict:
     t0 = time.time()
     ann = annotate_turns(t, TESTDATA_CONFIG).localCheckpoint()
     mentions = mentions_from_annotations(ann)
-    dictionary = spark.createDataFrame(
-        [(e,) for e in TESTDATA_ENTITIES], "entity string")
+    dictionary = dictionary_frame(spark, TESTDATA_ENTITIES)
     cmap = canonical_map(mentions, dictionary)
     _nodes, edges = materialize_graph(triples_from_annotations(ann), cmap)
     n_edges = edges.count()

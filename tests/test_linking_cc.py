@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import random
+import re
+from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -10,7 +12,7 @@ from pyspark.sql import functions as F
 from nlp_lib_spark.operators.canonicalize import (components_with_singletons,
                                                   connected_components)
 from nlp_lib_spark.operators.graph import canonical_map, materialize_graph
-from nlp_lib_spark.operators.linking import link_mentions
+from nlp_lib_spark.operators.linking import dictionary_frame, link_mentions
 
 
 def _uf_components(edges):
@@ -270,3 +272,134 @@ def test_tfidf_distributed_stop_gram_cap(spark):
     assert out["zebraq common"] == ("zebraq common", "exact")
     assert out["zebrak common"] == ("zebraq common", "tfidf3")
     assert out["wommon"][1] == "unlinked"
+
+
+def _py_norm(s):
+    return None if s is None else re.sub(r"\s+", " ", s.lower()).strip()
+
+
+def _py_verdicts(norms, entities, threshold=0.5):
+    """Pure-Python replica of the linking verdict rules, per norm."""
+    from nlp_lib_spark.operators.linking import _py_grams
+    canon = {}  # entity norm -> min raw entity
+    for e in entities:
+        n = _py_norm(e)
+        canon[n] = min(canon.get(n, e), e)
+    out = {}
+    for n in norms:
+        if n in canon:
+            out[n] = (canon[n], "exact", 1.0)
+            continue
+        best = None
+        if n is not None:
+            a = set(_py_grams(n))
+            for en, e in canon.items():
+                b = set(_py_grams(en))
+                inter = len(a & b)
+                # Spark's round(double, 4) is HALF_UP on the decimal repr
+                score = float(Decimal(repr(inter / (len(a) + len(b) - inter)))
+                              .quantize(Decimal("0.0001"), ROUND_HALF_UP))
+                if score >= threshold and (
+                        best is None or (-score, e) < (-best[1], best[0])):
+                    best = (e, score)
+        out[n] = ((best[0], "jaccard3", best[1]) if best
+                  else (n, "unlinked", 0.0))
+    return out
+
+
+def test_linking_matches_python_replica(spark):
+    """``canonical_map`` and ``link_mentions`` against a pure-Python
+    replica over seeded perturbed mentions: exact hits, case and
+    whitespace variants, one-edit typos, junk, short and empty strings,
+    a null, colliding dictionary norms and a Jaccard tie."""
+    rng = random.Random(17)
+    entities = ["hash join", "table scan", "spark", "shuffle spill",
+                "broadcast exchange", "row group", "US", "us", "the  US",
+                "abcdx", "abcdy", "zq"]
+    texts = []
+    for _ in range(60):
+        e = rng.choice(entities)
+        kind = rng.randrange(4)
+        if kind == 0:
+            texts.append(e)
+        elif kind == 1:
+            texts.append(e.upper() if rng.random() < 0.5 else e.title())
+        elif kind == 2:
+            texts.append("  " + e.replace(" ", " \t ") + " ")
+        else:
+            i = rng.randrange(len(e))
+            texts.append(e[:i] + rng.choice("xyz") + e[i + 1:])
+    texts += ["".join(rng.choice("jkqw ") for _ in range(rng.randrange(1, 9)))
+              for _ in range(10)]
+    # a tie (0.5 against abcdx and abcdy), short strings, empty, null
+    texts += ["abcde", "ab", "a", "zq", "", None, None, "the us", "US"]
+    mentions = spark.createDataFrame(pd.DataFrame(
+        {"mention_id": range(len(texts)), "mention_text": texts}))
+    dictionary = dictionary_frame(spark, entities)
+    exp = _py_verdicts({_py_norm(t) for t in texts}, entities)
+    assert exp["abcde"] == ("abcdx", "jaccard3", 0.5)
+    assert {m for _, m, _ in exp.values()} == {"exact", "jaccard3",
+                                               "unlinked"}
+
+    cmap = canonical_map(mentions, dictionary).collect()
+    assert len(cmap) == len(exp)  # one row per distinct norm
+    assert {r.norm: (r.method, r.score) for r in cmap} == {
+        n: (m, s) for n, (_, m, s) in exp.items()}
+    # component = least(entity, min linked norm of that entity)
+    label = {}
+    for n, (e, m, _) in exp.items():
+        if m != "unlinked":
+            label[e] = min(label.get(e, n), n)
+    assert {r.norm: r.entity_id for r in cmap} == {
+        n: (min(e, label[e]) if m != "unlinked" else n)
+        for n, (e, m, _) in exp.items()}
+
+    links = link_mentions(mentions, dictionary).collect()
+    assert sorted(r.mention_id for r in links) == list(range(len(texts)))
+    assert links[0].__fields__ == ["mention_id", "mention_text", "norm",
+                                   "entity", "method", "score"]
+    for r in links:
+        assert _py_norm(r.mention_text) == r.norm
+        assert (r.entity, r.method, r.score) == exp[r.norm]
+
+
+def test_fuzzy_tier_planned_only_for_unmatched_norms(spark):
+    """All-exact mentions plan no gram explode and no best-candidate
+    window; one typo brings both back and links as jaccard3."""
+    dictionary = dictionary_frame(spark, ["hash join", "spark"])
+
+    def cmap_and_plan(texts):
+        cm = canonical_map(spark.createDataFrame(
+            pd.DataFrame({"mention_text": texts})), dictionary)
+        return cm, cm._jdf.queryExecution().optimizedPlan().toString()
+    _, plan = cmap_and_plan(["hash join", "Spark", " spark "])
+    assert "Generate" not in plan and "row_number" not in plan
+    cm, plan = cmap_and_plan(["hash join", "Spark", "hash joln"])
+    assert "Generate" in plan and "row_number" in plan
+    assert {r.norm: r.method for r in cm.collect()}["hash joln"] == "jaccard3"
+
+
+def test_cmap_stage_dictionary_is_jvm_local(spark, monkeypatch):
+    """The cmap stage hands canonical_map an Arrow-built LocalRelation,
+    not a Python-RDD frame that forks Python tasks on every read."""
+    from nlp_lib_spark.operators import graph
+    from nlp_lib_spark.plans.checkpoint import full_kg_stages
+
+    plans = []
+    real = graph.canonical_map
+
+    def capture(mentions, dictionary):
+        plans.append(dictionary._jdf.queryExecution().analyzed().toString())
+        return real(mentions, dictionary)
+    monkeypatch.setattr(graph, "canonical_map", capture)
+    stage = next(s for s in full_kg_stages(None, None, ("hash join", "US"))
+                 if s.name == "cmap")
+    ann = spark.createDataFrame(
+        [("c1", 0, 0, ["E1", "E2"], ["Hash Join", "us"])],
+        "conv_id string, turn_idx int, sent_id int, "
+        "mention_ids array<string>, mention_texts array<string>")
+    out = {r.norm: r.entity_id
+           for r in stage.fn(spark, {"annotations": ann}).collect()}
+    assert out == {"hash join": "hash join", "us": "US"}
+    assert len(plans) == 1
+    assert "LocalRelation" in plans[0] and "LogicalRDD" not in plans[0]
