@@ -3441,10 +3441,10 @@ def q_kg_link_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _link_tfidf_oracle_sql() -> str:
     """Replica of ``operators/linking.link_mentions_tfidf``: the same
     exact tier + 3-gram blocking, scored by integer IDF weights.  The
-    gram->weight map is computed once in Python (gram_idf_weights) from
-    the same dictionary and injected as literals into BOTH engines, so
-    the only arithmetic either engine runs is integer sums plus one
-    BIGINT floor division (``DIV`` in Spark, ``//`` here)."""
+    gram->weight map is computed in Python (gram_idf_weights) from the
+    same dictionary and injected as literals, so DuckDB runs only integer
+    sums plus one BIGINT floor division (``//``); Spark computes the
+    same weights with ``bround`` of ``ln`` and floor-divides with ``DIV``."""
     from nlp_lib_spark.lexicons import TESTDATA_ENTITIES
     from nlp_lib_spark.operators.linking import gram_idf_weights
     import re
@@ -3527,55 +3527,33 @@ UNION ALL SELECT * FROM missing
 """
 
 
-@gate("kg_link_tfidf", oracle=_link_tfidf_oracle_sql())
-def q_kg_link_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IDF-weighted fuzzy linking verdicts (norm, entity, method,
-    score_micro) — the north-star's TF-IDF scoring tier, engine-exact
-    integer scores (operators/linking.link_mentions_tfidf).
-
-    Candidate stream: the distinct corpus token vocabulary (NOT just
-    gazetteer hits, which are dictionary members by construction and
-    would leave the fuzzy tier vacuous) — the candidate-linking shape a
-    real pipeline runs before canonicalization."""
+def _vocab_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """mentions(mention_text): the distinct corpus token vocabulary (NOT
+    just gazetteer hits, which are dictionary members by construction
+    and would leave the fuzzy tier vacuous) — the candidate-linking shape
+    a real pipeline runs before canonicalization."""
     from pyspark.sql import functions as F
 
-    from nlp_lib_spark.lexicons import TESTDATA_ENTITIES
-    from nlp_lib_spark.operators.linking import (_NORM,
-                                                 link_mentions_tfidf)
+    from nlp_lib_spark.operators.linking import _NORM
     register_views(spark, sf_dir)
     # emptiness is judged on the NORMALIZED form (matching the oracle):
     # a whitespace-only token must drop on both engines identically
-    mentions = (spark.table("documents")
-                .select(F.explode(F.split("text", " "))
-                        .alias("mention_text"))
-                .filter(F.expr(_NORM % "mention_text") != "")
-                .distinct())
-    dictionary = dictionary_frame(spark, sorted(set(TESTDATA_ENTITIES)))
-    return link_mentions_tfidf(mentions, dictionary)
+    return (spark.table("documents")
+            .select(F.explode(F.split("text", " ")).alias("mention_text"))
+            .filter(F.expr(_NORM % "mention_text") != "")
+            .distinct())
 
 
-@gate("kg_link_tfidf_dist", oracle=_link_tfidf_oracle_sql())
-def q_kg_link_tfidf_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The beyond-broadcast-size TF-IDF tier
-    (operators/linking.link_mentions_tfidf_distributed): gram IDF computed
-    by distributed aggregation and joined as a frame — zero driver-side
-    dictionary collect. Shares kg_link_tfidf's oracle verbatim, so a hash
-    match certifies the scale path emits the broadcast tier's verdicts
-    bit-for-bit (same JVM ln + half-even bround = the oracle's injected
-    Python-rounded integer weights)."""
-    from pyspark.sql import functions as F
-
+@gate("kg_link_tfidf", oracle=_link_tfidf_oracle_sql())
+def q_kg_link_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IDF-weighted fuzzy linking verdicts (norm, entity, method,
+    score_micro) over the corpus token vocabulary — the north-star's
+    TF-IDF scoring tier, engine-exact integer scores
+    (operators/linking.link_mentions_tfidf)."""
     from nlp_lib_spark.lexicons import TESTDATA_ENTITIES
-    from nlp_lib_spark.operators.linking import (
-        _NORM, link_mentions_tfidf_distributed)
-    register_views(spark, sf_dir)
-    mentions = (spark.table("documents")
-                .select(F.explode(F.split("text", " "))
-                        .alias("mention_text"))
-                .filter(F.expr(_NORM % "mention_text") != "")
-                .distinct())
+    from nlp_lib_spark.operators.linking import link_mentions_tfidf
     dictionary = dictionary_frame(spark, sorted(set(TESTDATA_ENTITIES)))
-    return link_mentions_tfidf_distributed(mentions, dictionary)
+    return link_mentions_tfidf(_vocab_mentions(spark, sf_dir), dictionary)
 
 
 @functools.lru_cache(maxsize=None)
@@ -3614,16 +3592,11 @@ def q_kg_vocab_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nlp_lib_spark.lexicons import TESTDATA_ENTITIES
     from nlp_lib_spark.operators.canonicalize import \
         components_with_singletons
-    from nlp_lib_spark.operators.linking import (_NORM, link_edges_for_cc,
+    from nlp_lib_spark.operators.linking import (link_edges_for_cc,
                                                  link_mentions_tfidf)
-    register_views(spark, sf_dir)
-    mentions = (spark.table("documents")
-                .select(F.explode(F.split("text", " "))
-                        .alias("mention_text"))
-                .filter(F.expr(_NORM % "mention_text") != "")
-                .distinct())
     dictionary = dictionary_frame(spark, sorted(set(TESTDATA_ENTITIES)))
-    linked = link_mentions_tfidf(mentions, dictionary).localCheckpoint()
+    linked = link_mentions_tfidf(_vocab_mentions(spark, sf_dir),
+                                 dictionary).localCheckpoint()
     edges = link_edges_for_cc(linked)
     verts = (linked.select(F.col("norm").alias("id"))
              .union(linked.select(F.col("entity").alias("id")))
@@ -4673,14 +4646,6 @@ union_composite("ann_variants", "variant", {
     "ivf_kmeans": "ann_topk_ivf_kmeans",
 })
 
-# TF-IDF linking: broadcast tier and the beyond-broadcast distributed
-# tier produce identical verdicts by construction (they already share one
-# oracle text verbatim); the composite certifies BOTH code paths.
-union_composite("kg_link_tfidf_all", "tier", {
-    "broadcast": "kg_link_tfidf",
-    "distributed": "kg_link_tfidf_dist",
-})
-
 # Flagship triples: batch plan and the per-file micro-batch streaming
 # drain must hash-equal the same oracle; the composite certifies both.
 union_composite("kg_triples_all", "mode", {
@@ -4864,8 +4829,8 @@ union_composite("kg_sessions_all", "mode", {
 # (CORRECTNESS_r02 ran exactly the first 50 of 58 in dict order), so
 # registration order is a certification decision, not a cosmetic one.
 # Layout: the first 50 entries cover EVERY operator family with zero
-# rotation losses (VERDICT r3 "Next round" 4) — 14 composites fold their
-# 60 member gates into 14 in-cap slots, freeing the cap for the
+# rotation losses (VERDICT r3 "Next round" 4) — 13 composites fold their
+# 58 member gates into 13 in-cap slots, freeing the cap for the
 # dedup/ANN family and the small gates that rotated out in round 3.
 # Everything past position 50 is a composite MEMBER (certified inside its
 # composite's value hash, and still individually compared by
@@ -4883,7 +4848,6 @@ _GATE_ORDER = [
     "kg_base",            # transcripts derivation + sentence splitter
     "media_suite",        # fake + real BMP/WAV + PNG + RLE8 BMP
     "media_frames_avi",   # DIB-AVI demux + frame sampling
-    "kg_link_tfidf_all",  # broadcast + distributed TF-IDF linking tiers
     "kg_triples_all",     # flagship batch plan + streaming drain
     # -- round-3/4 gates ---------------------------------------------------
     "kg_trees", "kg_tree_kernels", "kg_sense_features", "kg_sense_pred",
@@ -4897,7 +4861,7 @@ _GATE_ORDER = [
     "kg_crf_tags", "kg_discourse", "kg_hor_edges", "kg_rel_candidates",
     "kg_ml_triples", "kg_kernel_triples", "kg_wgp_triples",
     "kg_lll_triples", "kg_relx_triples", "kg_lll_ml_triples",
-    "kg_link_scores", "kg_vocab_canon", "kg_entity_links",
+    "kg_link_scores", "kg_link_tfidf", "kg_vocab_canon", "kg_entity_links",
     # -- LLM-data pipeline (returned to the cap in round 4) ----------------
     "kg_triple_counts", "dedup_all", "minhash_lsh_pairs",
     "neardup_pair_suite", "kg_sessions_all", "sentence_dedup",
@@ -4912,7 +4876,6 @@ _GATE_ORDER = [
     "kg_transcripts", "kg_sentences",
     "kg_conversations", "kg_boilerplate",
     "dedup_exact", "kg_stream_dedup", "kg_stream_dedup_wm",
-    "kg_link_tfidf", "kg_link_tfidf_dist",
     "media_features_real", "media_features_png", "media_features_rle8",
     "media_features",
     "ann_topk", "ann_topk_ivf_kmeans", "ann_topk_lsh", "ann_topk_ivf",

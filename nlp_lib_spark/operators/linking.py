@@ -12,24 +12,22 @@ reference's gazetteer (lowercase, exact membership) with a fuzzy tier:
    above ``threshold`` (deterministic tiebreak: higher score, then
    lexicographically smaller entity); the rest are ``unlinked``.
 
+``link_mentions_tfidf`` is the same two tiers with IDF-weighted 3-gram
+Jaccard as the fuzzy score, the weights computed in the JVM.
+
 Everything is built-in DataFrame ops over a JVM-local dictionary — the
 n-gram generation is a ``transform(sequence(...))`` expression, not a UDF.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 _NORM = "trim(regexp_replace(lower(%s), '\\\\s+', ' '))"
-
-# Max distinct entity norms for which driver-side IDF computation (and the
-# dictionary broadcast generally) is considered sound. ~1M norms of ~30
-# chars is tens of MB collected — comfortably driver-sized; beyond that,
-# use a distributed IDF (see the error message in link_mentions_tfidf).
-MAX_DICT_ENTITIES = 1_000_000
 
 
 def dictionary_frame(spark: SparkSession,
@@ -55,8 +53,10 @@ def normalize_mentions(mentions: DataFrame,
 
 def _canonical_dictionary(dictionary: DataFrame) -> DataFrame:
     """One entity per NORMALIZED surface form, min-entity tiebreak, so
-    colliding raw entries ('US'/'us') yield one verdict per norm."""
+    colliding raw entries ('US'/'us') yield one verdict per norm. Null
+    entities are dropped first: they must not count in the TF-IDF N."""
     return (dictionary
+            .filter(F.col("entity").isNotNull())
             .withColumn("entity_norm", F.expr(_NORM % "entity"))
             .groupBy("entity_norm")
             .agg(F.min("entity").alias("entity"))
@@ -140,14 +140,11 @@ def gram_idf_weights(entity_norms: tuple[str, ...],
 
     ``w(g) = max(1, round(scale * ln((N+1)/df(g))))`` over the N distinct
     dictionary entities; a mention gram absent from every entity gets the
-    smoothed ``df=0.5`` weight.  Weights are computed ONCE driver-side
-    (the dictionary is a broadcast-size dimension by the same contract
-    that lets it broadcast-join) and injected as integer literals into
-    both the Spark plan and the DuckDB oracle — so no ``ln`` ever
-    executes inside either engine and the score arithmetic stays
-    engine-exact (integer sums + one BIGINT floor division; the pr_eval
-    lesson)."""
-    import math
+    smoothed ``df=0.5`` weight.  The pure-Python reference of the weights
+    :func:`link_mentions_tfidf` computes in the JVM: the DuckDB oracle
+    injects these as integer literals, so no ``ln`` runs in DuckDB and
+    the score arithmetic stays engine-exact (integer sums + one BIGINT
+    floor division; the pr_eval lesson)."""
     norms = sorted(set(entity_norms))
     n = len(norms)
     df: dict[str, int] = {}
@@ -161,11 +158,12 @@ def gram_idf_weights(entity_norms: tuple[str, ...],
 
 
 def link_mentions_tfidf(mentions: DataFrame, dictionary: DataFrame,
-                        threshold_micro: int = 250_000) -> DataFrame:
-    """TF-IDF-weighted fuzzy linking tier (north-star: "broadcast-joined
-    candidate dictionaries with TF-IDF/Jaccard scoring").
+                        threshold_micro: int = 250_000,
+                        max_gram_df_frac: float | None = None) -> DataFrame:
+    """TF-IDF-weighted fuzzy linking tier (north-star: "TF-IDF/Jaccard
+    scoring").
 
-    Same exact-tier + 3-gram blocking as :func:`link_mentions`, but the
+    Same exact tier + 3-gram blocking as :func:`link_norms`, but the
     fuzzy score weights every gram by its dictionary IDF, so rare
     discriminative grams dominate and ubiquitous ones ("the", "ion")
     barely count:
@@ -179,96 +177,14 @@ def link_mentions_tfidf(mentions: DataFrame, dictionary: DataFrame,
     distinct normalized mention ``(norm, entity, method, score_micro)``
     with method ∈ {exact, tfidf3, unlinked}.
 
-    Scale shape: the dictionary (and thus the gram-weight table) is
-    broadcast; the mention side never shuffles except the one
-    groupBy(norm, entity) over gram-blocked candidates — identical to
-    the Jaccard tier's plan."""
-    spark = mentions.sparkSession
-    m = normalize_mentions(mentions).select("norm").distinct() \
-        .localCheckpoint()
-    d = _canonical_dictionary(dictionary)
-    # ENFORCED broadcast-size contract: IDF weights are computed
-    # driver-side from the collected dictionary, which is only sound
-    # while the dictionary is a broadcast-size dimension. limit(N+1)
-    # bounds the collect itself, so an oversized dictionary fails fast
-    # here instead of silently OOMing the driver.
-    probe = d.select("entity_norm").distinct() \
-             .limit(MAX_DICT_ENTITIES + 1).collect()
-    if len(probe) > MAX_DICT_ENTITIES:
-        raise ValueError(
-            f"link_mentions_tfidf: dictionary exceeds the broadcast-size "
-            f"contract ({MAX_DICT_ENTITIES} distinct entity norms). Use "
-            f"link_mentions_tfidf_distributed, which computes gram IDF "
-            f"with a distributed aggregation and joins the weights frame "
-            f"instead of injecting driver-side literals.")
-    ents = tuple(r.entity_norm for r in probe)
-    weights, w_oov = gram_idf_weights(ents)
-    wdf = spark.createDataFrame(pa.table(
-        {"gram": list(weights), "w": pa.array(weights.values(), pa.int64())}))
-
-    exact = (m.join(F.broadcast(d), m.norm == d.entity_norm)
-             .select("norm", "entity",
-                     F.lit("exact").alias("method"),
-                     F.lit(1_000_000).cast("long").alias("score_micro")))
-    unmatched = m.join(F.broadcast(d), m.norm == d.entity_norm,
-                       "left_anti")
-
-    mg = (unmatched.withColumn("grams", F.expr(_grams_expr("norm")))
-          .select("norm", F.explode("grams").alias("gram")))
-    a_w = (mg.join(F.broadcast(wdf), "gram", "left")
-           .groupBy("norm")
-           .agg(F.sum(F.coalesce(F.col("w"), F.lit(w_oov)))
-                .alias("a_w")))
-    dg = (d.withColumn("grams", F.expr(_grams_expr("entity_norm")))
-          .select("entity", F.explode("grams").alias("gram"))
-          .join(wdf, "gram"))
-    b_w = dg.groupBy("entity").agg(F.sum("w").alias("b_w"))
-    inter = (mg.join(F.broadcast(dg), "gram")
-             .groupBy("norm", "entity")
-             .agg(F.sum("w").alias("inter_w")))
-    cand = (inter.join(a_w, "norm").join(F.broadcast(b_w), "entity")
-            .withColumn("score_micro", F.expr(
-                "(inter_w * 1000000L) DIV (a_w + b_w - inter_w)"))
-            .filter(F.col("score_micro") >= threshold_micro))
-    w = Window.partitionBy("norm").orderBy(F.desc("score_micro"),
-                                           F.asc("entity"))
-    best = (cand.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") == 1)
-            .select("norm", "entity", "score_micro"))
-    fuzzy = (unmatched.join(best, "norm")
-             .select("norm", "entity",
-                     F.lit("tfidf3").alias("method"), "score_micro"))
-    missing = (unmatched.join(best, "norm", "left_anti")
-               .select("norm", F.col("norm").alias("entity"),
-                       F.lit("unlinked").alias("method"),
-                       F.lit(0).cast("long").alias("score_micro")))
-    return exact.unionByName(fuzzy).unionByName(missing)
-
-
-def link_mentions_tfidf_distributed(mentions: DataFrame,
-                                    dictionary: DataFrame,
-                                    threshold_micro: int = 250_000,
-                                    max_gram_df_frac: float | None = None
-                                    ) -> DataFrame:
-    """The beyond-broadcast-size TF-IDF linking tier: same verdict schema
-    and (by default) same scores as :func:`link_mentions_tfidf`, with NO
-    driver-side dictionary collect and NO dictionary broadcast — the
-    scale path the broadcast variant's contract error names.
-
-    How each broadcast-variant driver/broadcast structure becomes
-    distributed:
-
-    * IDF weights: ``explode(grams) -> groupBy(gram).count()`` over the
-      canonicalized dictionary (grams are per-entity-distinct already via
-      ``array_distinct``), then ``w = greatest(1, bround(scale *
-      ln((N+1)/df)))`` computed JVM-side. ``bround`` is half-even —
-      Python's ``round`` — so weights match :func:`gram_idf_weights`
-      bit-for-bit (same IEEE doubles in, same rounding). Only the scalar
-      entity count N (one aggregate) reaches the driver.
-    * exact tier + anti-join: plain shuffle equi-joins on the norm key.
-    * candidate blocking: mention grams shuffle-join dictionary grams on
-      the gram key (both sides already hash-partitioned by gram from the
-      weight join, so AQE coalesces rather than re-shuffles).
+    IDF weights are computed in the JVM: ``explode(grams) ->
+    groupBy(gram).count()`` over the canonical dictionary (grams are
+    per-entity-distinct already via ``array_distinct``), then ``w =
+    greatest(1, bround(scale * ln((N+1)/df)))``. ``bround`` is half-even
+    — Python's ``round`` — so the weights equal :func:`gram_idf_weights`
+    bit-for-bit (same IEEE doubles in, same rounding). Only the scalar
+    entity count N reaches the driver; the dictionary is never collected,
+    so it has no size limit.
 
     Skew: a ubiquitous gram ("ion", " th") fans the blocking join out as
     |mentions with g| x |entities with g|. AQE's skew-join split handles
@@ -278,13 +194,10 @@ def link_mentions_tfidf_distributed(mentions: DataFrame,
     BOTH sides and from the OOV fallback, so the score stays a true
     weighted Jaccard over the reduced universe — stop-gram removal, the
     documented approximation; such grams carry near-zero IDF weight
-    anyway). Default None = exact broadcast-variant semantics."""
-    # d feeds FOUR consumers (the count, dg, the exact join, the
-    # anti-join) — same multi-consumer re-computation hazard as dg/wdf/m
-    # below, so the canonicalization shuffle materializes once too.
+    anyway). Default None keeps every gram."""
+    # d feeds the count, dg and the exact join: materialize it once
     d = _canonical_dictionary(dictionary).localCheckpoint()
     n = d.count()  # scalar aggregate — the only driver round-trip
-    import math
     scale = 1_000_000
     w_oov = int(round(scale * math.log((n + 1) / 0.5)))
     # floor at 1: for small dictionaries frac*n < 1 would floor to a cap
@@ -298,8 +211,7 @@ def link_mentions_tfidf_distributed(mentions: DataFrame,
     # probe, the weighted index) and wdf two — Spark SQL re-computes a
     # referenced subtree per consumer (no common-subplan sharing), which
     # for a data-sized dictionary means re-exploding and re-aggregating
-    # it up to three times. localCheckpoint materializes each ONCE to
-    # executor-local storage (the same pattern as the mention frame).
+    # it up to three times. localCheckpoint materializes each ONCE.
     dg = (d.withColumn("grams", F.expr(_grams_expr("entity_norm")))
           .select("entity", F.explode("grams").alias("gram"))
           .localCheckpoint())
@@ -313,13 +225,17 @@ def link_mentions_tfidf_distributed(mentions: DataFrame,
            .select("gram", "w")
            .localCheckpoint())
 
-    m = normalize_mentions(mentions).select("norm").distinct() \
-        .localCheckpoint()
-    exact = (m.join(d, m.norm == d.entity_norm)
+    # one left join to the canonical dictionary resolves exact and
+    # unmatched norms together; checkpointed, as both tiers read it
+    resolved = (normalize_mentions(mentions).select("norm").distinct()
+                .join(d, F.col("norm") == d.entity_norm, "left")
+                .select("norm", "entity")
+                .localCheckpoint())
+    exact = (resolved.filter(F.col("entity").isNotNull())
              .select("norm", "entity",
                      F.lit("exact").alias("method"),
                      F.lit(1_000_000).cast("long").alias("score_micro")))
-    unmatched = m.join(d, m.norm == d.entity_norm, "left_anti")
+    unmatched = resolved.filter(F.col("entity").isNull()).select("norm")
 
     mg_all = (unmatched.withColumn("grams", F.expr(_grams_expr("norm")))
               .select("norm", F.explode("grams").alias("gram")))
@@ -349,10 +265,8 @@ def link_mentions_tfidf_distributed(mentions: DataFrame,
             .filter(F.col("rnk") == 1)
             .select("norm", F.col("entity").alias("best_entity"),
                     F.col("score_micro").alias("best_score")))
-    # ONE left join resolves fuzzy hits and unlinked rows together — the
-    # inner-join + anti-join pair the broadcast variant uses would inline
-    # (re-compute) the whole candidate subtree twice, which the broadcast
-    # plan can afford and this all-shuffle plan cannot
+    # one left join yields both the tfidf3 and the unlinked rows, so the
+    # candidate subtree is planned once
     linked = (unmatched.join(best, "norm", "left")
               .select("norm",
                       F.coalesce("best_entity", "norm").alias("entity"),

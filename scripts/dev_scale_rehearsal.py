@@ -158,14 +158,11 @@ def run_stream_state(spark, reps: int) -> dict:
 
 
 def run_link_tfidf_dist(spark, reps: int) -> dict:
-    """Round-3 addition: the beyond-broadcast-size linking tier under a
-    GROWING DICTIONARY (the axis the broadcast variant cannot scale on).
-    50k entities per rep — at 50 reps the 2.5M-entity dictionary is past
-    the 1M-norm broadcast contract, so the broadcast variant must refuse
-    while the distributed variant links a fixed 15k-norm mention set;
+    """Round-3 addition: the TF-IDF linking tier under a GROWING
+    DICTIONARY. 50k entities per rep (2.5M at 50 reps) against a fixed
+    15k-norm mention set; the dictionary is never collected, and
     rows_out stays 15k (one verdict per norm) at every dictionary size."""
-    from nlp_lib_spark.operators.linking import (
-        MAX_DICT_ENTITIES, link_mentions_tfidf, link_mentions_tfidf_distributed)
+    from nlp_lib_spark.operators.linking import link_mentions_tfidf
     n_ents = 50_000 * reps
     # a realistic dictionary gram profile: a small shared type vocabulary
     # (every real dictionary has its "protein"/"receptor" words — these
@@ -191,20 +188,11 @@ def run_link_tfidf_dist(spark, reps: int) -> dict:
                 .unionAll(spark.range(5_000).select(
                     F.expr("concat('zz', id, 'qq', id)")
                     .alias("mention_text")))).localCheckpoint()
-    over_contract = n_ents > MAX_DICT_ENTITIES
-    if over_contract:
-        try:
-            link_mentions_tfidf(mentions, dictionary)
-            raise AssertionError("broadcast variant accepted an "
-                                 "over-contract dictionary")
-        except ValueError:
-            pass  # the contract refusal working as shipped
     t0 = time.time()
-    out = link_mentions_tfidf_distributed(
+    out = link_mentions_tfidf(
         mentions, dictionary, max_gram_df_frac=0.01).count()
     return {"op": "link_tfidf_dist", "reps": reps, "rows_in": n_ents,
-            "rows_out": out, "sec": round(time.time() - t0, 2),
-            "broadcast_refused": over_contract}
+            "rows_out": out, "sec": round(time.time() - t0, 2)}
 
 
 def run_pii_scrub(spark, reps: int) -> dict:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -155,3 +156,12 @@ def test_cap_coverage_check_fires_on_uncovered_gate():
     assert [n for n in _GATE_ORDER if n not in QUERIES] == []
     assert [m for ms in COMPOSITE_MEMBERS.values() for m in ms
             if m not in QUERIES] == []
+
+
+def test_kg_link_tfidf_plans_one_best_candidate_window(spark):
+    """One left join resolves the exact/unmatched split and another the
+    tfidf3/unlinked rows, so the gate's optimized plan holds the
+    best-candidate row_number window exactly once."""
+    df = QUERIES["kg_link_tfidf"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bWindow \[row_number\(\)", plan)) == 1, plan

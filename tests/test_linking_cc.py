@@ -77,21 +77,74 @@ def test_fuzzy_linking_merges_typo(spark):
     assert by_norm["zzz qqq"][1] == "unlinked"
 
 
+def _py_tfidf_verdicts(norms, entities, threshold_micro):
+    """Pure-Python replica of the TF-IDF tier, per norm: gram_idf_weights
+    over the canonical dictionary, BIGINT floor division, best candidate
+    by score descending then entity ascending."""
+    from nlp_lib_spark.operators.linking import gram_idf_weights, _py_grams
+    canon = {}  # entity norm -> min raw entity
+    for e in entities:
+        n = _py_norm(e)
+        canon[n] = min(canon.get(n, e), e)
+    weights, w_oov = gram_idf_weights(tuple(canon))
+    out = {}
+    for n in norms:
+        if n in canon:
+            out[n] = (canon[n], "exact", 1_000_000)
+            continue
+        a = set(_py_grams(n))
+        a_w = sum(weights.get(g, w_oov) for g in a)
+        best = None
+        for en, e in canon.items():
+            b = set(_py_grams(en))
+            if not a & b:
+                continue  # no shared gram: never a blocking candidate
+            inter = sum(weights[g] for g in a & b)
+            b_w = sum(weights[g] for g in b)
+            score = (inter * 1_000_000) // (a_w + b_w - inter)
+            if score >= threshold_micro and (
+                    best is None or (-score, e) < (-best[1], best[0])):
+                best = (e, score)
+        out[n] = ((best[0], "tfidf3", best[1]) if best
+                  else (n, "unlinked", 0))
+    return out
+
+
 def test_tfidf_linking_tiers_and_exact_score(spark):
     """IDF-weighted tier: hand-checked score arithmetic (integer sums +
-    one BIGINT floor division — must equal the pure-Python rational)."""
+    one BIGINT floor division — must equal the pure-Python rational),
+    and every verdict equal to the pure-Python replica on two input
+    sets covering exact, tfidf3, colliding 'US'/'us', a norm shorter
+    than 3 characters and unlinked."""
     import math
 
     from nlp_lib_spark.operators.linking import (gram_idf_weights,
                                                  link_mentions_tfidf,
                                                  _py_grams)
     ents = ("hash join", "table scan", "spark")
-    mentions = spark.createDataFrame(pd.DataFrame(
-        {"mention_text": ["spark", "join", "zzz qqq", "a"]}))
-    dictionary = spark.createDataFrame(pd.DataFrame({"entity": list(ents)}))
-    got = {r.norm: (r.entity, r.method, r.score_micro)
-           for r in link_mentions_tfidf(mentions, dictionary,
-                                        threshold_micro=200_000).collect()}
+    input_sets = [
+        (list(ents), ["spark", "join", "zzz qqq", "a"]),
+        (["hash join", "table scan", "spark", "shuffle spill",
+          "broadcast exchange", "US", "us", "row group"],
+         ["spark", "Spark", "join", "tble scan", "shuffle  spill",
+          "broadcast exchang", "zzz qqq", "a", "US", "row gruop"]),
+    ]
+    runs = []
+    for entities, texts in input_sets:
+        mentions = spark.createDataFrame(
+            pd.DataFrame({"mention_text": texts}))
+        dictionary = dictionary_frame(spark, entities)
+        rows = link_mentions_tfidf(mentions, dictionary,
+                                   threshold_micro=200_000).collect()
+        got = {r.norm: (r.entity, r.method, r.score_micro) for r in rows}
+        assert len(got) == len(rows)  # one verdict per distinct norm
+        assert got == _py_tfidf_verdicts({_py_norm(t) for t in texts},
+                                         entities, 200_000)
+        runs.append(got)
+    got, wide = runs
+    assert {m for _, m, _ in wide.values()} == {"exact", "tfidf3",
+                                                "unlinked"}
+    assert wide["us"] == ("US", "exact", 1_000_000)
     assert got["spark"] == ("spark", "exact", 1_000_000)
     assert got["zzz qqq"][1] == "unlinked" and got["zzz qqq"][2] == 0
     assert got["a"][1] == "unlinked"
@@ -108,6 +161,29 @@ def test_tfidf_linking_tiers_and_exact_score(spark):
     n = len(set(ents))
     assert w_oov == int(round(1e6 * math.log((n + 1) / 0.5)))
     assert all(w >= 1 for w in weights.values())
+
+
+def test_null_dictionary_entries_change_no_verdict(spark):
+    """A null dictionary entry is dropped before the TF-IDF tier counts
+    its N, so it moves no score; the Jaccard tiers ignore it too."""
+    from nlp_lib_spark.operators.linking import (link_mentions_tfidf,
+                                                 link_norms,
+                                                 normalize_mentions)
+    ents = ["hash join", "table scan", "spark", "US"]
+    mentions = spark.createDataFrame(pd.DataFrame({"mention_text": [
+        "tble scan", "hash joln", "Spark", "us", "zzz qqq", "ab"]}))
+
+    def verdicts(entities):
+        d = dictionary_frame(spark, entities)
+        return [sorted(tuple(r) for r in df.collect()) for df in (
+            link_mentions_tfidf(mentions, d, threshold_micro=200_000),
+            link_mentions(mentions, d),
+            link_norms(normalize_mentions(mentions), d))]
+    base = verdicts(ents)
+    assert {r[2] for r in base[0]} == {"exact", "tfidf3", "unlinked"}
+    assert {r[3] for r in base[1]} == {"exact", "jaccard3", "unlinked"}
+    assert verdicts(ents + [None]) == base
+    assert verdicts([None] + ents + [None]) == base
 
 
 def test_tfidf_rare_gram_dominates(spark):
@@ -198,62 +274,11 @@ def test_cc_frees_superseded_checkpoints(spark):
     assert len(leaked) <= 1, leaked
 
 
-def test_tfidf_dictionary_contract_enforced(spark, monkeypatch):
-    """link_mentions_tfidf fails fast (naming the distributed
-    alternative) when the dictionary exceeds the broadcast-size
-    contract, instead of silently collecting it onto the driver."""
-    import pytest
-
-    from nlp_lib_spark.operators import linking
-
-    mentions = spark.createDataFrame([("spark",)], "mention_text string")
-    dictionary = spark.createDataFrame(
-        [(f"entity {i}",) for i in range(5)], "entity string")
-    monkeypatch.setattr(linking, "MAX_DICT_ENTITIES", 3)
-    with pytest.raises(ValueError, match="broadcast-size contract"):
-        linking.link_mentions_tfidf(mentions, dictionary)
-    # the named alternative handles the same over-contract dictionary
-    # without any driver collect or MAX_DICT_ENTITIES dependence
-    out = linking.link_mentions_tfidf_distributed(
-        mentions, dictionary).collect()
-    assert {r.method for r in out} <= {"exact", "tfidf3", "unlinked"}
-    # within the contract the same call succeeds
-    monkeypatch.setattr(linking, "MAX_DICT_ENTITIES", 1000)
-    out = linking.link_mentions_tfidf(mentions, dictionary).collect()
-    assert {r.method for r in out} <= {"exact", "tfidf3", "unlinked"}
-
-
-def test_tfidf_distributed_matches_broadcast(spark):
-    """The beyond-broadcast-scale variant must reproduce the broadcast
-    tier's verdicts BIT-FOR-BIT at its default (exact) setting — same
-    entities, same methods, same integer micro-scores — across every
-    verdict class (exact hit, fuzzy hit, norm-collision dedup, short
-    <3-char mention, unlinked)."""
-    from nlp_lib_spark.operators.linking import (
-        link_mentions_tfidf, link_mentions_tfidf_distributed)
-    ents = ["hash join", "table scan", "spark", "shuffle spill",
-            "broadcast exchange", "US", "us", "row group"]
-    mentions = spark.createDataFrame(pd.DataFrame({"mention_text": [
-        "spark", "Spark", "join", "tble scan", "shuffle  spill",
-        "broadcast exchang", "zzz qqq", "a", "US", "row gruop"]}))
-    dictionary = spark.createDataFrame(pd.DataFrame({"entity": ents}))
-    key = ["norm", "entity", "method", "score_micro"]
-    bc = (link_mentions_tfidf(mentions, dictionary,
-                              threshold_micro=200_000)
-          .toPandas().sort_values(key).reset_index(drop=True))
-    dist = (link_mentions_tfidf_distributed(mentions, dictionary,
-                                            threshold_micro=200_000)
-            .toPandas().sort_values(key).reset_index(drop=True))
-    pd.testing.assert_frame_equal(bc[key], dist[key])
-    assert set(bc.method) == {"exact", "tfidf3", "unlinked"}
-
-
 def test_tfidf_distributed_stop_gram_cap(spark):
     """max_gram_df_frac drops ubiquitous grams from BOTH sides: verdicts
     stay one-per-norm with exact hits untouched, and a mention whose only
     shared grams are the capped-out ubiquitous ones goes unlinked."""
-    from nlp_lib_spark.operators.linking import (
-        link_mentions_tfidf_distributed)
+    from nlp_lib_spark.operators.linking import link_mentions_tfidf
     # "common" appears in every entity -> its grams df == N get capped;
     # each entity's distinctive head word survives
     ents = [f"{w} common" for w in
@@ -265,7 +290,7 @@ def test_tfidf_distributed_stop_gram_cap(spark):
     ]}))
     dictionary = spark.createDataFrame(pd.DataFrame({"entity": ents}))
     out = {r.norm: (r.entity, r.method)
-           for r in link_mentions_tfidf_distributed(
+           for r in link_mentions_tfidf(
                mentions, dictionary, threshold_micro=100_000,
                max_gram_df_frac=0.5).collect()}
     assert len(out) == 3  # one verdict per norm
