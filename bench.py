@@ -50,9 +50,6 @@ HEADLINE = (
     "minhash_lsh_pairs",   # MinHash+LSH near-dup candidate pairs
     "dedup_exact",         # exact dedup by content hash
     "ann_topk",            # brute-force cosine top-k
-    "media_features_real", # real BMP/WAV decode + pixel/sample stats (r3)
-    "media_features_rle8", # BI_RLE8 BMP escape-machine decode (r5)
-    "media_frames_avi",    # real AVI demux + frame sampling (r3)
     "doc_quality",         # text quality scoring
     "kg_link_scores",      # broadcast-dict linking (exact + Jaccard)
     "kg_edges",            # linking + CC + graph materialization

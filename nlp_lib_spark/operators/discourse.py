@@ -125,6 +125,32 @@ def hor_edges(disc: DataFrame, triples: DataFrame) -> DataFrame:
         "arg2_subj", "arg2_pred", "arg2_obj")
 
 
+def _connective_spans(pdf: pd.DataFrame, lex: ConnectiveLexicon):
+    """Yield ``(row, toks, pos, tree, span)`` for every lexicon connective
+    span of every well-formed annotation row in ``pdf``.  The frozen
+    constituency tree (kernels/constit.build_tree, parsed back from its
+    Penn string) is built once per row, and only for rows with a span."""
+    from nlp_lib_spark.kernels.constit import build_tree
+    from nlp_lib_spark.kernels.tree import parse_penn
+    for r in pdf.itertuples(index=False):
+        toks = list(r.blinded)
+        pos = list(r.pos)
+        if not toks or len(pos) != len(toks):
+            continue
+        spans = lex.find(toks)
+        if not spans:
+            continue
+        tree = parse_penn(build_tree(toks, pos))
+        for span in spans:
+            yield r, toks, pos, tree, span
+
+
+_FEATURE_COLUMNS = ["conv_id", "turn_idx", "sent_id", "conn_start",
+                    "conn_end", "fidx", "feature"]
+_FEATURE_SCHEMA = ("conv_id string, turn_idx int, sent_id int, "
+                   "conn_start int, conn_end int, fidx int, feature string")
+
+
 def conn_features_v2_rows(ann: DataFrame,
                           conn2cat: dict[str, str] | None = None
                           ) -> DataFrame:
@@ -137,39 +163,21 @@ def conn_features_v2_rows(ann: DataFrame,
 
     One stateless Arrow pass; the lexicon rides the closure."""
     from nlp_lib_spark.kernels.connfeatures import connective_features_v2
-    from nlp_lib_spark.kernels.constit import build_tree
-    from nlp_lib_spark.kernels.tree import parse_penn
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lex = ConnectiveLexicon(conn2cat)
         for pdf in batches:
             rows = []
-            for r in pdf.itertuples(index=False):
-                toks = list(r.blinded)
-                pos = list(r.pos)
-                if not toks or len(pos) != len(toks):
-                    continue
-                spans = lex.find(toks)
-                if not spans:
-                    continue
-                tree = parse_penn(build_tree(toks, pos))
-                for span in spans:
-                    cat = lex.sense(toks, span)
-                    feats = connective_features_v2(toks, pos, tree,
-                                                   span[0], span[1], cat)
-                    for fi, f in enumerate(feats):
-                        rows.append((r.conv_id, int(r.turn_idx),
-                                     int(r.sent_id), span[0], span[1],
-                                     fi, f))
-            yield pd.DataFrame(rows, columns=[
-                "conv_id", "turn_idx", "sent_id", "conn_start", "conn_end",
-                "fidx", "feature"])
+            for r, toks, pos, tree, span in _connective_spans(pdf, lex):
+                feats = connective_features_v2(toks, pos, tree, span[0],
+                                               span[1], lex.sense(toks, span))
+                for fi, f in enumerate(feats):
+                    rows.append((r.conv_id, int(r.turn_idx),
+                                 int(r.sent_id), span[0], span[1], fi, f))
+            yield pd.DataFrame(rows, columns=_FEATURE_COLUMNS)
 
     return (ann.select("conv_id", "turn_idx", "sent_id", "blinded", "pos")
-            .mapInPandas(fn, schema="conv_id string, turn_idx int, "
-                                    "sent_id int, conn_start int, "
-                                    "conn_end int, fidx int, "
-                                    "feature string"))
+            .mapInPandas(fn, schema=_FEATURE_SCHEMA))
 
 
 def sense_feature_rows(ann: DataFrame,
@@ -187,42 +195,25 @@ def sense_feature_rows(ann: DataFrame,
     One stateless Arrow pass; the lexicon rides the closure (broadcast
     dims)."""
     from nlp_lib_spark.kernels.connfeatures import sense_features
-    from nlp_lib_spark.kernels.constit import build_tree
     from nlp_lib_spark.kernels.discourse import arg2_head
-    from nlp_lib_spark.kernels.tree import parse_penn
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lex = ConnectiveLexicon(conn2cat)
         for pdf in batches:
             rows = []
-            for r in pdf.itertuples(index=False):
-                toks = list(r.blinded)
-                pos = list(r.pos)
-                if not toks or len(pos) != len(toks):
+            for r, toks, pos, tree, span in _connective_spans(pdf, lex):
+                a2h = arg2_head(toks, pos, span)
+                if a2h < 0:
                     continue
-                spans = lex.find(toks)
-                if not spans:
-                    continue
-                tree = parse_penn(build_tree(toks, pos))
-                for span in spans:
-                    a2h = arg2_head(toks, pos, span)
-                    if a2h < 0:
-                        continue
-                    feats = sense_features(toks, pos, tree, span[0], span[1],
-                                           a2h, lex.sense(toks, span))
-                    for fi, f in enumerate(feats):
-                        rows.append((r.conv_id, int(r.turn_idx),
-                                     int(r.sent_id), span[0], span[1],
-                                     fi, f))
-            yield pd.DataFrame(rows, columns=[
-                "conv_id", "turn_idx", "sent_id", "conn_start", "conn_end",
-                "fidx", "feature"])
+                feats = sense_features(toks, pos, tree, span[0], span[1],
+                                       a2h, lex.sense(toks, span))
+                for fi, f in enumerate(feats):
+                    rows.append((r.conv_id, int(r.turn_idx),
+                                 int(r.sent_id), span[0], span[1], fi, f))
+            yield pd.DataFrame(rows, columns=_FEATURE_COLUMNS)
 
     return (ann.select("conv_id", "turn_idx", "sent_id", "blinded", "pos")
-            .mapInPandas(fn, schema="conv_id string, turn_idx int, "
-                                    "sent_id int, conn_start int, "
-                                    "conn_end int, fidx int, "
-                                    "feature string"))
+            .mapInPandas(fn, schema=_FEATURE_SCHEMA))
 
 
 def sense_predictions(ann: DataFrame, model: dict,
@@ -237,10 +228,8 @@ def sense_predictions(ann: DataFrame, model: dict,
     ``models/sense_me.json``; it rides the task closure (a few KB —
     broadcast-dim scale).  One stateless Arrow pass."""
     from nlp_lib_spark.kernels.connfeatures import sense_features
-    from nlp_lib_spark.kernels.constit import build_tree
     from nlp_lib_spark.kernels.discourse import arg2_head
     from nlp_lib_spark.kernels.scoring import score_softmax_int
-    from nlp_lib_spark.kernels.tree import parse_penn
 
     classes = sorted(model["classes"])
     weights = model["weights"]
@@ -250,27 +239,16 @@ def sense_predictions(ann: DataFrame, model: dict,
         lex = ConnectiveLexicon(conn2cat)
         for pdf in batches:
             rows = []
-            for r in pdf.itertuples(index=False):
-                toks = list(r.blinded)
-                pos = list(r.pos)
-                if not toks or len(pos) != len(toks):
+            for r, toks, pos, tree, span in _connective_spans(pdf, lex):
+                a2h = arg2_head(toks, pos, span)
+                if a2h < 0:
                     continue
-                spans = lex.find(toks)
-                if not spans:
-                    continue
-                tree = parse_penn(build_tree(toks, pos))
-                for span in spans:
-                    a2h = arg2_head(toks, pos, span)
-                    if a2h < 0:
-                        continue
-                    feats = sense_features(toks, pos, tree, span[0],
-                                           span[1], a2h,
-                                           lex.sense(toks, span))
-                    pred, sc = score_softmax_int(feats, weights, biases,
-                                                 classes)
-                    rows.append((r.conv_id, int(r.turn_idx),
-                                 int(r.sent_id), span[0], span[1],
-                                 pred, sc))
+                feats = sense_features(toks, pos, tree, span[0], span[1],
+                                       a2h, lex.sense(toks, span))
+                pred, sc = score_softmax_int(feats, weights, biases,
+                                             classes)
+                rows.append((r.conv_id, int(r.turn_idx), int(r.sent_id),
+                             span[0], span[1], pred, sc))
             yield pd.DataFrame(rows, columns=[
                 "conv_id", "turn_idx", "sent_id", "conn_start", "conn_end",
                 "pred_sense", "score"])

@@ -197,7 +197,23 @@ def link_mentions_tfidf(mentions: DataFrame, dictionary: DataFrame,
     anyway). Default None keeps every gram."""
     # d feeds the count, dg and the exact join: materialize it once
     d = _canonical_dictionary(dictionary).localCheckpoint()
-    n = d.count()  # scalar aggregate — the only driver round-trip
+    # one left join to the canonical dictionary resolves exact and
+    # unmatched norms together; checkpointed, as both tiers read it
+    resolved = (normalize_mentions(mentions).select("norm").distinct()
+                .join(d, F.col("norm") == d.entity_norm, "left")
+                .select("norm", "entity")
+                .localCheckpoint())
+    exact = (resolved.filter(F.col("entity").isNotNull())
+             .select("norm", "entity",
+                     F.lit("exact").alias("method"),
+                     F.lit(1_000_000).cast("long").alias("score_micro")))
+    unmatched = resolved.filter(F.col("entity").isNull()).select("norm")
+    # a one-task probe, as in link_norms: the weight tables and the fuzzy
+    # plan below cost several jobs even over zero unmatched norms
+    if unmatched.isEmpty():
+        return exact
+
+    n = d.count()  # a scalar: the dictionary itself never reaches the driver
     scale = 1_000_000
     w_oov = int(round(scale * math.log((n + 1) / 0.5)))
     # floor at 1: for small dictionaries frac*n < 1 would floor to a cap
@@ -224,18 +240,6 @@ def link_mentions_tfidf(mentions: DataFrame, dictionary: DataFrame,
                .cast("long")))
            .select("gram", "w")
            .localCheckpoint())
-
-    # one left join to the canonical dictionary resolves exact and
-    # unmatched norms together; checkpointed, as both tiers read it
-    resolved = (normalize_mentions(mentions).select("norm").distinct()
-                .join(d, F.col("norm") == d.entity_norm, "left")
-                .select("norm", "entity")
-                .localCheckpoint())
-    exact = (resolved.filter(F.col("entity").isNotNull())
-             .select("norm", "entity",
-                     F.lit("exact").alias("method"),
-                     F.lit(1_000_000).cast("long").alias("score_micro")))
-    unmatched = resolved.filter(F.col("entity").isNull()).select("norm")
 
     mg_all = (unmatched.withColumn("grams", F.expr(_grams_expr("norm")))
               .select("norm", F.explode("grams").alias("gram")))

@@ -120,7 +120,7 @@ def stream_dedup_watermarked(spark: SparkSession, input_dir: str,
     deployable on a never-ending ingest stream at 100 TB, where the
     unbounded seen-hash set would grow without limit. The drop/keep and
     eviction/re-emit contract is pinned by
-    tests/test_multimodal_streaming.py; the in-watermark drain is
+    tests/test_streaming.py; the in-watermark drain is
     driver-certified against the batch distinct-set oracle
     (gate kg_stream_dedup_wm inside dedup_all)."""
     from pyspark.sql import functions as F

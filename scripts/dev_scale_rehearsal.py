@@ -97,32 +97,6 @@ def run_kg_edges(spark, reps: int) -> dict:
             "rows_out": n_edges, "sec": round(time.time() - t0, 2)}
 
 
-def run_media_real(spark, reps: int) -> dict:
-    """Round-3 addition: the real-decode media path at volume — payload
-    bytes are born and consumed inside one task (two chained MapInPandas,
-    zero Exchanges), so wall time must stay linear in row count and no
-    payload ever hits a shuffle."""
-    import pandas as pd
-
-    from nlp_lib_spark.operators.mediacodec import synth_payload
-    from nlp_lib_spark.operators.multimodal import extract_media_features
-    docs = replicate_docs(spark, reps).localCheckpoint()
-    n_docs = docs.count()
-    t0 = time.time()
-
-    def synth(batches):
-        for pdf in batches:
-            rows = [(int(d), *synth_payload(int(d), t))
-                    for d, t in zip(pdf["doc_id"], pdf["text"])]
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
-
-    media = docs.select("doc_id", "text").mapInPandas(
-        synth, schema="media_id long, kind string, payload binary")
-    n = extract_media_features(media, mode="real").count()
-    return {"op": "media_features_real", "reps": reps, "rows_in": n_docs,
-            "rows_out": n, "sec": round(time.time() - t0, 2)}
-
-
 def run_stream_state(spark, reps: int) -> dict:
     """Round-3 addition: applyInPandasWithState under growing input.
     conv_id = doc_id % 100, so replication multiplies TURNS PER
@@ -648,8 +622,8 @@ def main() -> None:
     elif only_r4:
         ops = ROUND4_OPS
     else:
-        ops = (run_lsh, run_cc, run_kg_edges, run_media_real,
-               run_stream_state, run_link_tfidf_dist) \
+        ops = (run_lsh, run_cc, run_kg_edges, run_stream_state,
+               run_link_tfidf_dist) \
             + ROUND4_OPS + ROUND5_OPS + ROUND5B_OPS
     spark = get_spark(cpus=32)
     for reps in reps_list:

@@ -186,6 +186,24 @@ def test_null_dictionary_entries_change_no_verdict(spark):
     assert verdicts([None] + ents + [None]) == base
 
 
+def test_tfidf_all_exact_skips_fuzzy_tier(spark):
+    """When every norm matches exactly, the TF-IDF tier returns the exact
+    verdicts without building its weight tables: only the dictionary and
+    the resolved norms are checkpointed."""
+    from nlp_lib_spark.operators.canonicalize import _persistent_ids
+    from nlp_lib_spark.operators.linking import link_mentions_tfidf
+    mentions = spark.createDataFrame(pd.DataFrame(
+        {"mention_text": ["TBK1", "p53", "us"]}))
+    dictionary = dictionary_frame(spark, ["tbk1", "p53", "mdm2", "US", "us"])
+    before = _persistent_ids(spark.sparkContext)
+    rows = link_mentions_tfidf(mentions, dictionary).collect()
+    assert len(_persistent_ids(spark.sparkContext) - before) == 2
+    assert sorted(tuple(r) for r in rows) == [
+        ("p53", "p53", "exact", 1_000_000),
+        ("tbk1", "tbk1", "exact", 1_000_000),
+        ("us", "US", "exact", 1_000_000)]
+
+
 def test_tfidf_rare_gram_dominates(spark):
     """The discriminative (rare) gram must outvote ubiquitous ones: a
     mention sharing one rare gram with A scores higher against A than a

@@ -1,7 +1,7 @@
 """PageRank: Spark operator vs an independent pure-Python replica.
 
-DuckDB oracle parity is covered by test_gate_parity (kg_pagerank /
-kg_node_suite); here operators/graph.pagerank is checked against a
+DuckDB oracle parity is covered by test_gate_parity (kg_pagerank);
+here operators/graph.pagerank is checked against a
 from-scratch integer PageRank over seeded random multigraphs (self
 loops excluded upstream by the gate, included here — the operator must
 handle them), plus structural invariants.

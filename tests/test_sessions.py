@@ -1,7 +1,7 @@
 """Sessionization: batch vs Python model, streaming vs batch.
 
-Gate parity (kg_sessions / kg_stream_sessions / kg_sessions_all) covers
-the DuckDB oracle; here the batch operator is checked against an
+Gate parity (kg_sessions / kg_stream_sessions, both hashed against one
+shared oracle) covers the DuckDB oracle; here the batch operator is checked against an
 independent Python islands implementation over random event times
 (including exact-gap boundaries and duplicate timestamps), and the
 streaming session_window drain is checked row-identical to the batch

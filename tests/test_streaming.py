@@ -1,74 +1,13 @@
-"""Multimodal stub plumbing + streaming ingest parity with batch."""
+"""Streaming ingest parity with batch: triples, windowed aggregates,
+stateful conversation counts, and the watermarked dedup contract."""
 
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from nlp_lib_spark.fixtures import FIXTURE_CONFIG, generate_transcripts
 from nlp_lib_spark.operators.extract import extract_triples
-from nlp_lib_spark.operators.multimodal import (extract_media_features,
-                                                frame_sample)
 from nlp_lib_spark.streaming.ingest import run_stream_once
-
-
-@pytest.fixture()
-def media_df(spark):
-    rows = [(i, ["image", "audio", "video"][i % 3],
-             bytes([i % 251] * (64 + 64 * i))) for i in range(9)]
-    return spark.createDataFrame(rows, "media_id long, kind string, payload binary")
-
-
-def test_media_features_deterministic(spark, media_df):
-    a = extract_media_features(media_df).toPandas().sort_values("media_id")
-    b = extract_media_features(media_df.repartition(4)).toPandas() \
-        .sort_values("media_id")
-    pd.testing.assert_frame_equal(a.reset_index(drop=True),
-                                  b.reset_index(drop=True))
-    assert (a.features.map(len) == 16).all()
-    assert (a.n_bytes > 0).all()
-
-
-def test_media_real_mode_rejects_unknown_containers(spark, media_df):
-    """mode="real" is a genuine decoder since round 3 (BMP/WAV via
-    operators/mediacodec); payloads that are no known container must
-    fail loudly, naming the available codecs — not decode as garbage."""
-    with pytest.raises(Exception) as ei:
-        extract_media_features(media_df, mode="real").collect()
-    assert "unsupported media container" in str(ei.value)
-
-
-def test_video_frame_real_rejects_non_avi(spark, media_df):
-    """mode="real" frame sampling is a genuine AVI demuxer since round 3;
-    payloads that are not AVI containers must fail loudly."""
-    with pytest.raises(Exception) as ei:
-        frame_sample(media_df, mode="real").collect()
-    assert "not an AVI payload" in str(ei.value)
-
-
-def test_video_frame_real_decodes_avi(spark):
-    from nlp_lib_spark.operators.mediacodec import (frame_features,
-                                                    synth_avi_payload)
-    from nlp_lib_spark.operators.multimodal import frame_sample
-    rows = [(i, "video", synth_avi_payload(f"clip {i}")) for i in range(5)]
-    df = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary")
-    out = frame_sample(df.repartition(3), every_n=2, mode="real").toPandas()
-    assert sorted(out.media_id.unique()) == list(range(5))
-    for i in range(5):
-        got = (out[out.media_id == i].sort_values("frame_idx")
-               [["frame_idx", "features"]].values.tolist())
-        expect = [[k, feats] for k, feats in
-                  frame_features(synth_avi_payload(f"clip {i}"), 2)]
-        assert [[g[0], [round(float(x), 4) for x in g[1]]] for g in got] \
-            == expect
-
-
-def test_frame_sampling_shape(spark, media_df):
-    out = frame_sample(media_df, every_n=3).toPandas()
-    # one input row explodes into >= 1 frame rows
-    assert out.media_id.nunique() == 9
-    assert (out.frame_idx % 3 == 0).all()
 
 
 def test_streaming_matches_batch(spark, tmp_path):
