@@ -14,6 +14,7 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from nlp_lib_spark.kernels.domain import DomainAnnotator
@@ -54,6 +55,14 @@ def rule_predictions(iob: DataFrame, deps: DataFrame,
             .mapInPandas(fn, schema=PRED_SCHEMA))
 
 
+def _one_row(spark, row: dict) -> DataFrame:
+    """One result row built from Arrow, a JVM-local ``LocalRelation`` (a
+    list-built frame is a Python RDD that forks Python tasks per read):
+    Arrow infers int64 for ints and float64 for floats, so the columns are
+    bigint and double."""
+    return spark.createDataFrame(pa.table({k: [v] for k, v in row.items()}))
+
+
 def rule_eval(iob: DataFrame, deps: DataFrame,
               domain_terms: tuple[str, ...]) -> DataFrame:
     """One-row micro P/R/F vs gold pair ids (label=1)."""
@@ -86,10 +95,9 @@ def rule_eval(iob: DataFrame, deps: DataFrame,
     recall = tp / max(1, tp + fn)
     f1 = (2 * precision * recall / (precision + recall)
           if precision + recall else 0.0)
-    spark = iob.sparkSession
-    return spark.createDataFrame(
-        [(tp, fp, fn, round(precision, 4), round(recall, 4), round(f1, 4))],
-        "tp long, fp long, fn long, precision_ double, recall_ double, f1 double")
+    return _one_row(iob.sparkSession, {
+        "tp": tp, "fp": fp, "fn": fn, "precision_": round(precision, 4),
+        "recall_": round(recall, 4), "f1": round(f1, 4)})
 
 
 def write_ppi_corpus(ann_rows: list[dict], out_dir: str) -> None:
@@ -338,7 +346,5 @@ def candidate_recall_eval(iob: DataFrame, deps: DataFrame,
                              & (F.col("label") == 1), 1).otherwise(0))
                 .alias("miss"))
            .first())
-    spark = iob.sparkSession
-    return spark.createDataFrame(
-        [(int(row["tp"] or 0), int(row["fp"] or 0), int(row["miss"] or 0))],
-        "tp long, fp long, miss long")
+    return _one_row(iob.sparkSession, {
+        k: int(row[k] or 0) for k in ("tp", "fp", "miss")})

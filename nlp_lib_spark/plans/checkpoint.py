@@ -1,7 +1,7 @@
 """Stage checkpointing with per-partition lineage and exact resume.
 
 North-rule obligation (BASELINE.json): every stage checkpoints per-partition
-lineage + counters so a killed job resumes from the last complete stage and
+lineage + counters so a killed job resumes from its complete stages and
 reproduces byte-identical output.
 
 Layout per stage under ``root``::
@@ -11,16 +11,21 @@ Layout per stage under ``root``::
     <root>/<stage>/_LINEAGE_OK     marker: stage complete + lineage verified
     <root>/_metrics.jsonl          append-only stage metrics (driver side)
 
-A stage is skipped on resume iff its marker exists; the marker is written
-only after the data write finished AND the lineage of the written files was
-recomputed and persisted — a half-written stage can never be mistaken for
-complete (parquet job-commit + marker ordering).  Persisting a stage costs
-its data write plus one lineage aggregate over the written files: its
-result (at most one row per partition) is collected, the driver writes it
-with pyarrow and takes the marker's ``rows``, ``partitions`` and stage
-``checksum`` from the same rows.  Stage tables are read back with the
-schema stored in their parquet footers, so no read runs a schema-inference
-job.
+Stages form a DAG through their declared ``deps`` (each naming an earlier
+stage).  ``run()`` decides resume vs recompute in list order, then runs
+every recomputed stage in its own thread as soon as its deps are complete,
+so independent branches write and verify concurrently.  A stage is
+skipped on resume iff its marker exists; the marker is written only after
+the data write finished AND the lineage of the written files was
+recomputed and persisted, and only after every dep's marker — a
+half-written stage can never be mistaken for complete, and the markers on
+disk always form a down-closed set of the DAG (parquet job-commit +
+marker ordering).  Persisting a stage costs its data write plus one
+lineage aggregate over the written files: its result (at most one row per
+partition) is collected, the driver writes it with pyarrow and takes the
+marker's ``rows``, ``partitions`` and stage ``checksum`` from the same
+rows.  Stage tables are read back with the schema stored in their parquet
+footers, so no read runs a schema-inference job.
 
 Checksums are order-insensitive within a partition (bit_xor of row hashes
 over the canonical JSON of each row), so lineage verification is stable
@@ -32,6 +37,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 from dataclasses import dataclass
 from collections.abc import Callable
@@ -40,6 +46,7 @@ from operator import xor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
@@ -119,10 +126,20 @@ class CheckpointedPipeline:
             raise ValueError(
                 f"checkpoint root must be a driver-local path, got {root!r}"
                 " (markers and metrics are written with local file I/O)")
+        names = [s.name for s in stages]
+        for i, stage in enumerate(stages):
+            if stage.name in names[:i]:
+                raise ValueError(f"duplicate stage {stage.name!r}")
+            for d in stage.deps:
+                if d not in names[:i]:
+                    where = "a later" if d in names else "an unknown"
+                    raise ValueError(f"stage {stage.name!r} depends on "
+                                     f"{where} stage {d!r}")
         self.spark = spark
         self.root = root.rstrip("/")
         self.stages = stages
         self.computed: dict[str, bool] = {}
+        self._log_lock = threading.Lock()
 
     def _paths(self, name: str) -> tuple[str, str, str]:
         base = f"{self.root}/{name}"
@@ -136,14 +153,27 @@ class CheckpointedPipeline:
             return json.load(f)
 
     def _log_metric(self, rec: dict) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        with open(f"{self.root}/_metrics.jsonl", "a") as f:
-            f.write(json.dumps(rec) + "\n")
+        # stage threads append concurrently: one whole line at a time
+        with self._log_lock:
+            os.makedirs(self.root, exist_ok=True)
+            with open(f"{self.root}/_metrics.jsonl", "a") as f:
+                f.write(json.dumps(rec) + "\n")
 
     def run(self, inputs: dict[str, DataFrame] | None = None,
             resume: bool = True) -> dict[str, DataFrame]:
-        """Resume or compute every stage in order; returns each stage's
-        output re-read from its checkpoint (plus ``inputs``).
+        """Resume or compute every stage; returns each stage's output
+        re-read from its checkpoint (plus ``inputs``).
+
+        Resume vs recompute is decided in list order.  Each recomputed
+        stage then runs in its own thread once its deps are complete, so
+        stages on independent branches write and verify concurrently;
+        stage functions themselves are called one at a time, each with
+        ``inputs`` plus the outputs of its declared deps only (reading
+        any other stage raises ``KeyError``).  The caller's job group,
+        description and tags apply to every stage's jobs.  When a stage
+        fails, the stages depending on it do not start, the other
+        branches still finish and write their markers, and the first
+        error is raised once every stage thread has ended.
 
         Stage functions may ``localCheckpoint`` frames that later stages
         reuse (``full_kg_stages`` shares one graph build between nodes and
@@ -157,18 +187,19 @@ class CheckpointedPipeline:
         finally:
             _unpersist_rdd_ids(sc, _persistent_ids(sc) - before)
 
-    def _run(self, inputs: dict[str, DataFrame] | None,
-             resume: bool) -> dict[str, DataFrame]:
-        outputs: dict[str, DataFrame] = dict(inputs or {})
+    def _plan(self, outputs: dict[str, DataFrame],
+              resume: bool) -> list[Stage]:
+        """Resume every stage whose checkpoint holds into ``outputs``;
+        return the stages to recompute, their stale markers removed."""
         # stages recomputed THIS run; anything depending on one of them
         # must also recompute — a resumed checkpoint derived from data
-        # that was just recomputed could be stale.  (After a mid-chain
-        # kill, markers form a prefix of the stage order, so the cascade
-        # only changes behavior for schema invalidation and explicit
-        # invalidate() calls, where it is exactly what is wanted.)
+        # that was just recomputed could be stale.  (After a kill or a
+        # failed stage, markers form a down-closed set of the DAG, so the
+        # cascade only changes behavior for schema invalidation and
+        # explicit invalidate() calls, where it is exactly what is wanted.)
         dirty: set[str] = set()
         for stage in self.stages:
-            data_p, lin_p, marker = self._paths(stage.name)
+            data_p, _, marker = self._paths(stage.name)
             dep_dirty = any(d in dirty for d in stage.deps)
             if resume and not dep_dirty and os.path.exists(marker):
                 resumed = _read_stage(self.spark, data_p)
@@ -182,34 +213,75 @@ class CheckpointedPipeline:
                                   "event": "schema_invalidated",
                                   "missing_cols": sorted(missing),
                                   "ts": time.time()})
-                os.remove(marker)
             dirty.add(stage.name)
-            # drop any stale marker BEFORE overwriting the data: the
-            # dep-dirty cascade and resume=False reach here with an old
-            # marker still on disk, and a kill mid-overwrite must not let
-            # the half-written stage resume as complete (the module's
-            # core invariant — previously only the schema-invalidation
-            # path removed it)
+            self.computed[stage.name] = True
+            # drop any stale marker BEFORE any stage runs: the dep-dirty
+            # cascade and resume=False reach here with an old marker
+            # still on disk, and a kill mid-overwrite must not let the
+            # half-written stage resume as complete
             if os.path.exists(marker):
                 os.remove(marker)
-            t0 = time.time()
-            df = stage.fn(self.spark, outputs)
-            df.write.mode("overwrite").parquet(data_p)
-            written = _read_stage(self.spark, data_p)
-            lineage = _lineage(written).collect()
-            _write_lineage(lin_p, stage.name, lineage)
-            totals = {"rows": sum(r.n_rows for r in lineage),
-                      "partitions": len(lineage),
-                      "checksum": reduce(xor, (r.checksum for r in lineage),
-                                         0)}
-            with open(marker, "w") as f:
-                f.write(json.dumps(totals))
-            self._log_metric({"stage": stage.name, "event": "complete",
-                              **totals,
-                              "wall_sec": round(time.time() - t0, 3),
-                              "ts": time.time()})
-            outputs[stage.name] = written
-            self.computed[stage.name] = True
+        return [s for s in self.stages if s.name in dirty]
+
+    def _persist(self, stage: Stage, df: DataFrame, t0: float) -> DataFrame:
+        """Write, re-read and verify one stage; its marker goes last."""
+        data_p, lin_p, marker = self._paths(stage.name)
+        df.write.mode("overwrite").parquet(data_p)
+        written = _read_stage(self.spark, data_p)
+        lineage = _lineage(written).collect()
+        _write_lineage(lin_p, stage.name, lineage)
+        totals = {"rows": sum(r.n_rows for r in lineage),
+                  "partitions": len(lineage),
+                  "checksum": reduce(xor, (r.checksum for r in lineage), 0)}
+        with open(marker, "w") as f:
+            f.write(json.dumps(totals))
+        self._log_metric({"stage": stage.name, "event": "complete",
+                          **totals, "wall_sec": round(time.time() - t0, 3),
+                          "ts": time.time()})
+        return written
+
+    def _run(self, inputs: dict[str, DataFrame] | None,
+             resume: bool) -> dict[str, DataFrame]:
+        base = dict(inputs or {})
+        outputs = dict(base)
+        todo = self._plan(outputs, resume)
+        # set once a stage's marker is written, or once it failed or was
+        # skipped (then it is missing from ``outputs``)
+        done = {s.name: threading.Event() for s in todo}
+        errors: list[BaseException] = []
+        # one stage fn at a time: fns may share driver-side state (the
+        # graph build of full_kg_stages, a caller's tracing hooks)
+        fn_lock = threading.Lock()
+
+        def compute(stage: Stage) -> None:
+            try:
+                for d in stage.deps:
+                    if d in done:
+                        done[d].wait()
+                if any(d not in outputs for d in stage.deps):
+                    return  # a dep failed: this stage does not start
+                with fn_lock:
+                    t0 = time.time()
+                    df = stage.fn(self.spark, {
+                        **base, **{d: outputs[d] for d in stage.deps}})
+                outputs[stage.name] = self._persist(stage, df, t0)
+            except BaseException as e:  # re-raised by the caller thread
+                errors.append(e)
+            finally:
+                done[stage.name].set()
+
+        # each thread starts with a copy of the caller's local properties
+        # (job group, description) and the session's tags
+        threads = [InheritableThread(compute, args=(stage,),
+                                     session=self.spark,
+                                     name=f"checkpoint-{stage.name}")
+                   for stage in todo]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        if errors:
+            raise errors[0]
         return outputs
 
     def invalidate(self, name: str) -> None:
@@ -248,13 +320,16 @@ def full_kg_stages(sf_dir: str, config, dictionary: tuple[str, ...],
                    lll_config=None) -> list[Stage]:
     """The complete KG-construction DAG (SURVEY.md §7 stage list):
 
-    transcripts -> annotations -> triples -> discourse -> hor_edges
-    -> entity canonical map -> nodes + edges. Every stage checkpoints with
-    per-partition lineage, so a kill anywhere resumes exactly.
+    transcripts -> annotations -> {triples, discourse, cmap}; hor_edges
+    from discourse + triples; nodes and edges from triples + cmap.  The
+    three branches after annotations, and hor_edges beside nodes/edges,
+    run concurrently.  Every stage checkpoints with per-partition lineage,
+    so a kill anywhere resumes exactly.
 
     ``lll_config`` (an ``operators.lll.LLLConfig``) additionally appends
     the legacy-LLL engine as an ``lll_triples`` stage off the checkpointed
-    transcripts — at scale all engines share the one transcripts scan.
+    transcripts, so it overlaps annotations — at scale all engines share
+    the one transcripts scan.
     """
     from pyspark.sql import functions as F
 

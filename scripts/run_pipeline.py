@@ -6,10 +6,13 @@
     python scripts/run_pipeline.py [sf_dir] [checkpoint_root]
 
 Runs the full DAG (transcripts -> annotations -> triples -> discourse ->
-HOR edges -> canonical map -> nodes/edges), checkpointing every stage with
-per-partition lineage. Re-running resumes: complete stages are skipped and
-outputs are byte-identical (tests/test_checkpoint_resume.py proves the
-mechanism; this script is the operational wrapper).
+HOR edges -> canonical map -> nodes/edges, plus lll_triples off the
+transcripts), checkpointing every stage with per-partition lineage.
+Independent stages run concurrently: lll_triples overlaps annotations, and
+triples, discourse and the canonical map overlap each other. Re-running
+resumes: complete stages are skipped and outputs are byte-identical
+(tests/test_checkpoint_resume.py proves the mechanism; this script is the
+operational wrapper).
 """
 
 from __future__ import annotations

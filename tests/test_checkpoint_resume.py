@@ -1,4 +1,5 @@
-"""Kill-and-resume: byte-identical output, stages skipped on resume."""
+"""Kill-and-resume: byte-identical output, stages skipped on resume, and
+the dependency-driven stage scheduling of ``CheckpointedPipeline.run``."""
 
 from __future__ import annotations
 
@@ -37,9 +38,11 @@ def _stages(fixture_df):
         Stage("transcripts", lambda sp, o: fixture_df.repartition(4, "conv_id")
               .sortWithinPartitions("conv_id", "turn_idx")),
         Stage("annotations",
-              lambda sp, o: annotate_turns(o["transcripts"], FIXTURE_CONFIG)),
+              lambda sp, o: annotate_turns(o["transcripts"], FIXTURE_CONFIG),
+              deps=("transcripts",)),
         Stage("triples",
-              lambda sp, o: extract_triples(o["transcripts"], FIXTURE_CONFIG)),
+              lambda sp, o: extract_triples(o["transcripts"], FIXTURE_CONFIG),
+              deps=("transcripts",)),
     ]
 
 
@@ -268,3 +271,177 @@ def test_full_kg_graph_stages_share_one_build(spark, fixture_df, tmp_path,
     assert stage("edges").count() > 0
     assert bag(stage("nodes")) == bag(nodes)
     assert bag(stage("edges")) == bag(edges)
+
+
+def _rendezvous(df, tmp_path, me: str, other: str, timeout: float = 60.0):
+    """``df`` passed through a mapInPandas that, inside the write's task,
+    announces ``me`` and waits for ``other``: two such stages only finish
+    when their writes run at the same time."""
+    import time
+
+    here, there = str(tmp_path / me), str(tmp_path / other)
+
+    def meet(batches):
+        open(here, "w").close()
+        deadline = time.time() + timeout
+        while not os.path.exists(there):
+            if time.time() > deadline:
+                raise TimeoutError(f"{me}: {other} never ran beside it")
+            time.sleep(0.05)
+        yield from batches
+    return df.coalesce(1).mapInPandas(meet, schema=df.schema)
+
+
+def test_independent_stages_write_concurrently(spark, fixture_df, tmp_path):
+    """Two siblings of ``transcripts`` meet at a rendezvous inside their
+    data writes: a runner that persists stages one after another times
+    out."""
+    stages = _stages(fixture_df)[:1] + [
+        Stage("left", lambda sp, o: _rendezvous(
+            o["transcripts"], tmp_path, "left", "right"),
+            deps=("transcripts",)),
+        Stage("right", lambda sp, o: _rendezvous(
+            o["transcripts"], tmp_path, "right", "left"),
+            deps=("transcripts",)),
+    ]
+    root = str(tmp_path / "ckpt")
+    pipe = CheckpointedPipeline(spark, root, stages)
+    outs = pipe.run()
+    n = pipe.marker("transcripts")["rows"]
+    assert pipe.marker("left")["rows"] == pipe.marker("right")["rows"] == n
+    assert outs["left"].count() == n
+
+
+def test_failed_branch_keeps_sibling_markers(spark, fixture_df, tmp_path):
+    """A failing stage stops only its dependents: its sibling branch
+    completes with a marker, and the next run recomputes exactly the
+    failed stage and its dependents."""
+    def stages(fail: bool):
+        def annotations(sp, o):
+            if fail:
+                raise RuntimeError("annotations failed")
+            return _stages(fixture_df)[1].fn(sp, o)
+        base = _stages(fixture_df)
+        return [base[0],
+                Stage("annotations", annotations, deps=("transcripts",)),
+                Stage("sample", lambda sp, o: o["annotations"].limit(5),
+                      deps=("annotations",)),
+                base[2]]
+
+    root = str(tmp_path / "ckpt")
+    with pytest.raises(RuntimeError, match="annotations failed"):
+        CheckpointedPipeline(spark, root, stages(fail=True)).run()
+    for s, complete in (("transcripts", True), ("annotations", False),
+                        ("sample", False), ("triples", True)):
+        assert os.path.exists(f"{root}/{s}/_LINEAGE_OK") == complete, s
+    pipe = CheckpointedPipeline(spark, root, stages(fail=False))
+    pipe.run()
+    assert pipe.computed == {"transcripts": False, "annotations": True,
+                             "sample": True, "triples": False}
+
+
+def test_stage_reads_only_declared_deps(spark, fixture_df, tmp_path):
+    """A stage fn sees ``inputs`` plus its declared deps: reading any
+    other stage is a ``KeyError`` whatever the timing, and a dep on an
+    unknown or a later stage is refused up front."""
+    stages = _stages(fixture_df)
+    stages[2] = Stage("triples", lambda sp, o: o["annotations"],
+                      deps=("transcripts",))
+    with pytest.raises(KeyError, match="annotations"):
+        CheckpointedPipeline(spark, str(tmp_path / "a"), stages).run()
+
+    stages = _stages(fixture_df)
+    stages[1] = Stage("annotations", stages[1].fn, deps=("triples",))
+    with pytest.raises(ValueError, match="later stage 'triples'"):
+        CheckpointedPipeline(spark, str(tmp_path / "b"), stages)
+    stages[1] = Stage("annotations", stages[1].fn, deps=("nope",))
+    with pytest.raises(ValueError, match="unknown stage 'nope'"):
+        CheckpointedPipeline(spark, str(tmp_path / "b"), stages)
+    with pytest.raises(ValueError, match="duplicate stage 'transcripts'"):
+        CheckpointedPipeline(spark, str(tmp_path / "b"),
+                             _stages(fixture_df)[:1] * 2)
+
+    src = fixture_df.limit(3)
+    outs = CheckpointedPipeline(spark, str(tmp_path / "c"), [
+        Stage("copy", lambda sp, o: o["src"])]).run({"src": src})
+    assert outs["src"] is src and outs["copy"].count() == 3
+
+
+def test_stage_jobs_carry_the_callers_job_group(spark, fixture_df,
+                                                tmp_path):
+    """Every job ``run()`` starts, in whichever stage thread, runs under
+    the job group the caller set."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        listed = store.jobsList(None)
+        return {listed.apply(k).jobId(): listed.apply(k).jobGroup()
+                for k in range(listed.size())}
+
+    before = set(jobs())
+    sc.setJobGroup("checkpoint-test-group", "caller's group")
+    try:
+        CheckpointedPipeline(spark, str(tmp_path / "ckpt"),
+                             _stages(fixture_df)).run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    new = {j: g for j, g in jobs().items() if j not in before}
+    assert len(new) >= 6  # a write and a lineage job per stage
+    assert {g.get() if g.isDefined() else None for g in new.values()} \
+        == {"checkpoint-test-group"}
+
+
+def test_wide_dag_stress_completes_in_dependency_order(spark, tmp_path):
+    """Twelve tiny stages, eight of them runnable at once on four cores,
+    with the interpreter switching threads every few microseconds: every
+    stage completes once, each fn call and each completion comes after
+    those of its deps, and the run ends within its time bound."""
+    import json
+    import random
+    import sys
+    import threading
+    from functools import reduce
+
+    rng = random.Random(5)
+    names = [f"s{i}" for i in range(12)]
+    deps = {n: ("s0",) for n in names[1:9]}
+    deps["s0"] = ()
+    for n in names[9:]:
+        deps[n] = tuple(rng.sample(names[1:9], 2))
+    calls = []
+
+    def fn(name):
+        def run(sp, o):
+            calls.append(name)
+            if not deps[name]:
+                return sp.range(8)
+            return reduce(lambda a, b: a.union(b),
+                          (o[d] for d in deps[name])).distinct()
+        return run
+
+    stages = [Stage(n, fn(n), deps=deps[n]) for n in names]
+    root = str(tmp_path / "ckpt")
+    pipe = CheckpointedPipeline(spark, root, stages)
+    result = {}
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        t = threading.Thread(target=lambda: result.update(pipe.run()))
+        t.start()
+        t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not t.is_alive(), "run() did not finish within 300 s"
+    assert set(names) <= set(result)
+    assert sorted(calls) == sorted(names)
+    with open(f"{root}/_metrics.jsonl") as f:
+        done = [json.loads(line) for line in f]
+    assert sorted(r["stage"] for r in done) == sorted(names)
+    ts = {r["stage"]: r["ts"] for r in done}
+    for n in names:
+        assert all(calls.index(d) < calls.index(n) for d in deps[n])
+        assert all(ts[d] <= ts[n] for d in deps[n])
+        assert pipe.marker(n)["rows"] == 8
