@@ -62,12 +62,14 @@ _ARG_POS = re.compile(r"VB.*|NNS?|JJ.*|MD")
 _ARG2_POS = re.compile(r"VB.*|NN.*|JJ.*|MD.*|AUX.*")
 
 
+_LOOKBACK = 5  # previous sentences of history fed to the Arg1 ranker
+
+
 class ConnectiveLexicon:
     __slots__ = ("conn2cat", "max_len")
 
-    def __init__(self, conn2cat: dict[str, str] | None = None):
-        self.conn2cat = {k.lower(): v for k, v in
-                         (conn2cat or DEFAULT_CONNECTIVES).items()}
+    def __init__(self):
+        self.conn2cat = {k.lower(): v for k, v in DEFAULT_CONNECTIVES.items()}
         self.max_len = 4  # ConnectiveExtractor.java:89
 
     def find(self, tokens: list[str]) -> list[tuple[int, int]]:

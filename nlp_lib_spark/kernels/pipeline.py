@@ -175,7 +175,7 @@ def emit_triples(blinded, mapping: dict[str, str],
                  domain: list[str | None], pairs) -> list[tuple]:
     """(e1_tok, e2_tok, subj, pred, obj) per predicted pair — shared by the
     fused chain (triples_for_sentence) and the staged one
-    (operators/extract.triples_from_annotations)."""
+    (operators/extract.annotate_turns)."""
     out = []
     for (i, j) in pairs:
         so = pair_subj_obj(mapping, blinded, i, j)

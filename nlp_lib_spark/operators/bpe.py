@@ -34,6 +34,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from nlp_lib_spark.operators.canonicalize import (_persistent_ids,
+                                                  _unpersist_rdd_ids)
+
 # Frozen merge table: classic BPE trained offline on the corpus
 # vocabulary (scripts/train_bpe.py regenerates it; most-frequent adjacent
 # pair per step, ties broken lexicographically). Rank = position.
@@ -228,7 +231,13 @@ def bpe_train_merges(docs: DataFrame, n_merges: int = 8,
                      text_col: str = "text") -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from ``docs`` (any frame with a
     whitespace-tokenizable ``text_col``).  Returns the merge table in
-    creation order (rank = index)."""
+    creation order (rank = index).
+
+    Each round's vocabulary is a localCheckpoint; the superseded one is
+    freed at the RDD layer as soon as its successor exists, and the last
+    one before returning (the result is a Python list)."""
+    sc = docs.sparkSession.sparkContext
+    pre = _persistent_ids(sc)
     vocab = (docs
              .select(F.explode(F.split(text_col, " ")).alias("word"))
              .filter(F.col("word") != "")
@@ -237,6 +246,7 @@ def bpe_train_merges(docs: DataFrame, n_merges: int = 8,
                  F.expr("regexp_replace(word, '(?s)(.)', '  $1')"),
                  F.lit("  ")).alias("s"), "n")
              .localCheckpoint())
+    own = _persistent_ids(sc) - pre
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         top = (vocab
@@ -256,10 +266,14 @@ def bpe_train_merges(docs: DataFrame, n_merges: int = 8,
         # F.replace with literal Columns: exact string match, no regex,
         # no SQL-text interpolation of data-derived symbols (the
         # sampling.py injection lesson)
+        pre = _persistent_ids(sc)
         vocab = vocab.select(
             F.replace(F.col("s"), F.lit(f" {l}  {r} "),
                       F.lit(f" {l}{r} ")).alias("s"),
             "n").localCheckpoint()
+        _unpersist_rdd_ids(sc, own)  # superseded round's blocks
+        own = _persistent_ids(sc) - pre
+    _unpersist_rdd_ids(sc, own)
     return merges
 
 

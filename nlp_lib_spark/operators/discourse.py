@@ -1,11 +1,13 @@
 """Discourse operators: connective relations + higher-order (cross-turn) edges.
 
-This is the stage that makes the KG conversation-aware: Arg1 lookback runs
-over a ``Window.partitionBy(conv_id).orderBy(turn_idx, sent_id)`` trailing
-frame (the reference walks previous sentences of the document with a
-decaying budget, ``integration/Arg1Extractor.java:87-107``). Everything
-per-sentence is an Arrow UDF over the annotations table; the only shuffle is
-the conversation window and the final HOR equi-joins.
+This is the stage that makes the KG conversation-aware.  The relations
+themselves, Arg1 lookback included, come out of the one conversation-
+ordered annotation pass (``operators/extract.annotate_turns``, which walks
+back over each conversation's previous sentences as the reference walks
+the document's, ``integration/Arg1Extractor.java:87-107``), so
+``discourse_relations`` is a plain explode.  The connective feature and
+sense operators are stateless Arrow passes over the annotations table;
+the only shuffles are the final HOR equi-joins.
 """
 
 from __future__ import annotations
@@ -13,82 +15,21 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nlp_lib_spark.kernels.discourse import (ConnectiveLexicon,
-                                             discourse_for_sentence)
-
-_LOOKBACK = 5  # sentences of history fed to the Arg1 ranker
-
-DISCOURSE_SCHEMA = (
-    "conv_id string, turn_idx int, sent_id int, conn string, "
-    "conn_start int, conn_end int, sense string, arg2_head int, "
-    "arg1_turn_idx int, arg1_sent_id int, arg1_head int"
-)
-
-# JVM-side main-head expression: first V* token, else first N*, else 0
-_MAIN_HEAD_EXPR = """
-coalesce(
-  get(filter(transform(pos, (p, i) -> CASE WHEN p LIKE 'V%' THEN i ELSE -1 END), x -> x >= 0), 0),
-  get(filter(transform(pos, (p, i) -> CASE WHEN p LIKE 'N%' THEN i ELSE -1 END), x -> x >= 0), 0),
-  0)
-"""
+from nlp_lib_spark.kernels.discourse import ConnectiveLexicon
 
 
-def discourse_relations(ann: DataFrame,
-                        conn2cat: dict[str, str] | None = None) -> DataFrame:
+def discourse_relations(ann: DataFrame) -> DataFrame:
     """annotations -> one row per (connective, args) discourse relation.
 
     ``arg1_turn_idx/arg1_sent_id`` may point at an earlier sentence or an
     earlier *turn* — the cross-turn edges of the north star.
     """
-    w = (Window.partitionBy("conv_id")
-         .orderBy("turn_idx", "sent_id")
-         .rowsBetween(-_LOOKBACK, -1))
-    ann2 = (ann
-            .withColumn("main_head", F.expr(_MAIN_HEAD_EXPR))
-            .withColumn("prev_heads",
-                        F.reverse(F.collect_list("main_head").over(w)))
-            .withColumn("prev_keys",
-                        F.reverse(F.collect_list(
-                            F.struct("turn_idx", "sent_id")).over(w)))
-            .select("conv_id", "turn_idx", "sent_id", "blinded", "pos",
-                    "edges", "prev_heads", "prev_keys"))
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lex = ConnectiveLexicon(conn2cat)
-        cols = ["conv_id", "turn_idx", "sent_id", "conn", "conn_start",
-                "conn_end", "sense", "arg2_head", "arg1_turn_idx",
-                "arg1_sent_id", "arg1_head"]
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                tokens = list(r.blinded)
-                if not tokens:
-                    continue
-                pos = list(r.pos)
-                edges = [(e["reln"], e["gov"], e["dep"]) for e in r.edges]
-                prev_heads = [int(h) for h in r.prev_heads]
-                prev_keys = [(int(k["turn_idx"]), int(k["sent_id"]))
-                             for k in r.prev_keys]
-                for rel in discourse_for_sentence(tokens, pos, edges, lex,
-                                                  prev_heads):
-                    off = rel["arg1_offset"]
-                    if off > 0 and off <= len(prev_keys):
-                        a1_turn, a1_sent = prev_keys[off - 1]
-                    elif off == 0:
-                        a1_turn, a1_sent = int(r.turn_idx), int(r.sent_id)
-                    else:
-                        a1_turn, a1_sent = -1, -1
-                    rows.append((r.conv_id, int(r.turn_idx), int(r.sent_id),
-                                 rel["conn"], rel["conn_start"],
-                                 rel["conn_end"], rel["sense"],
-                                 rel["arg2_head"], a1_turn, a1_sent,
-                                 rel["arg1_head"]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return ann2.mapInPandas(fn, schema=DISCOURSE_SCHEMA)
+    return (ann.select("conv_id", "turn_idx", "sent_id",
+                       F.explode("discourse").alias("d"))
+               .select("conv_id", "turn_idx", "sent_id", "d.*"))
 
 
 def hor_edges(disc: DataFrame, triples: DataFrame) -> DataFrame:
@@ -151,9 +92,7 @@ _FEATURE_SCHEMA = ("conv_id string, turn_idx int, sent_id int, "
                    "conn_start int, conn_end int, fidx int, feature string")
 
 
-def conn_features_v2_rows(ann: DataFrame,
-                          conn2cat: dict[str, str] | None = None
-                          ) -> DataFrame:
+def conn_features_v2_rows(ann: DataFrame) -> DataFrame:
     """Per-candidate connective-disambiguation feature rows from the
     richer variant-2 pipe (kernels/connfeatures.connective_features_v2,
     the ml/PDTBConnective2FeatureVector2.java port) — one row per emitted
@@ -165,7 +104,7 @@ def conn_features_v2_rows(ann: DataFrame,
     from nlp_lib_spark.kernels.connfeatures import connective_features_v2
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lex = ConnectiveLexicon(conn2cat)
+        lex = ConnectiveLexicon()
         for pdf in batches:
             rows = []
             for r, toks, pos, tree, span in _connective_spans(pdf, lex):
@@ -180,8 +119,7 @@ def conn_features_v2_rows(ann: DataFrame,
             .mapInPandas(fn, schema=_FEATURE_SCHEMA))
 
 
-def sense_feature_rows(ann: DataFrame,
-                       conn2cat: dict[str, str] | None = None) -> DataFrame:
+def sense_feature_rows(ann: DataFrame) -> DataFrame:
     """Per-connective sense-classifier feature rows (the
     PDTBConnectiveSense2FeatureVector port, kernels/connfeatures.
     sense_features) — one row per emitted feature string, order-indexed.
@@ -198,7 +136,7 @@ def sense_feature_rows(ann: DataFrame,
     from nlp_lib_spark.kernels.discourse import arg2_head
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lex = ConnectiveLexicon(conn2cat)
+        lex = ConnectiveLexicon()
         for pdf in batches:
             rows = []
             for r, toks, pos, tree, span in _connective_spans(pdf, lex):
@@ -216,8 +154,7 @@ def sense_feature_rows(ann: DataFrame,
             .mapInPandas(fn, schema=_FEATURE_SCHEMA))
 
 
-def sense_predictions(ann: DataFrame, model: dict,
-                      conn2cat: dict[str, str] | None = None) -> DataFrame:
+def sense_predictions(ann: DataFrame, model: dict) -> DataFrame:
     """Per-connective PREDICTED sense: the runtime of the trained sense
     classifier (``ml/PDTBNewConnectiveSenseTrainer.java:96-150`` trains a
     Mallet MaxEnt over the sense pipe; ``integration/SenseExtractor``
@@ -236,7 +173,7 @@ def sense_predictions(ann: DataFrame, model: dict,
     biases = model["biases"]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lex = ConnectiveLexicon(conn2cat)
+        lex = ConnectiveLexicon()
         for pdf in batches:
             rows = []
             for r, toks, pos, tree, span in _connective_spans(pdf, lex):

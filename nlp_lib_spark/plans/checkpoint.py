@@ -305,14 +305,14 @@ def kg_stages(sf_dir: str, config) -> list[Stage]:
         return annotate_turns(outs["transcripts"], config)
 
     def s_triples(spark, outs):
-        # derive from the checkpointed annotations (pairs precomputed) —
-        # a resume after the annotations stage never re-runs the
-        # expensive chain, it reads the stage table
+        # explode the checkpointed annotations' triples column — a resume
+        # after the annotations stage never re-runs the expensive chain,
+        # and no Python runs here at all
         return triples_from_annotations(outs["annotations"])
 
     return [Stage("transcripts", s_transcripts),
             Stage("annotations", s_annotations, deps=("transcripts",),
-                  required_cols=("pairs",)),
+                  required_cols=("triples", "discourse")),
             Stage("triples", s_triples, deps=("annotations",))]
 
 
@@ -324,7 +324,8 @@ def full_kg_stages(sf_dir: str, config, dictionary: tuple[str, ...],
     from discourse + triples; nodes and edges from triples + cmap.  The
     three branches after annotations, and hor_edges beside nodes/edges,
     run concurrently.  Every stage checkpoints with per-partition lineage,
-    so a kill anywhere resumes exactly.
+    so a kill anywhere resumes exactly.  Only annotations runs Python over
+    sentences: triples and discourse explode its array columns.
 
     ``lll_config`` (an ``operators.lll.LLLConfig``) additionally appends
     the legacy-LLL engine as an ``lll_triples`` stage off the checkpointed

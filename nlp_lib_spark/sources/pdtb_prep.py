@@ -121,8 +121,7 @@ def pdtb_corpus_stats(relations: DataFrame) -> DataFrame:
     return by_type.unionByName(conn).unionByName(sense)
 
 
-def biodrb_conn_iob_rows(iob: DataFrame,
-                         conn2cat: dict[str, str] | None = None) -> DataFrame:
+def biodrb_conn_iob_rows(iob: DataFrame) -> DataFrame:
     """BioDRB2PDTBStyle.createConnIOBFile + markBaseConnective
     (corpus/biodrb/BioDRB2PDTBStyle.java:59-110): shrink every annotated
     connective span to its longest sub-span that is a base connective of
@@ -140,7 +139,7 @@ def biodrb_conn_iob_rows(iob: DataFrame,
     from nlp_lib_spark.kernels.discourse import ConnectiveLexicon
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lex = ConnectiveLexicon(conn2cat)
+        lex = ConnectiveLexicon()
         for pdf in batches:
             out_tags = []
             for toks, tags in zip(pdf["tokens"], pdf["conn"]):

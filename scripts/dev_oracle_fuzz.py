@@ -396,10 +396,13 @@ def _check_ext(con, rows, what: str) -> int:
 
 def _discourse_py(con, rows, rt):
     """Pure-Python mirror of operators/discourse.discourse_relations (the
-    5-sentence trailing window over the ordered annotation stream) plus
-    the per-sentence triples the HOR join consumes."""
-    from nlp_lib_spark.kernels.discourse import (ConnectiveLexicon,
-                                                 discourse_for_sentence)
+    ``_LOOKBACK``-sentence history over each conversation's ordered
+    annotation stream) plus the per-sentence triples the HOR join
+    consumes."""
+    from nlp_lib_spark.kernels.discourse import (_LOOKBACK,
+                                                 ConnectiveLexicon,
+                                                 discourse_for_sentence,
+                                                 main_head)
     from nlp_lib_spark.kernels.pipeline import (annotate_sentence,
                                                 extract_turn)
     lex = ConnectiveLexicon()
@@ -421,7 +424,7 @@ def _discourse_py(con, rows, rt):
     hist: dict[str, list] = {}
     for conv, ti, sid, blinded, pos, edges in ann_rows:
         h = hist.setdefault(conv, [])
-        prev = h[-5:][::-1]  # nearest previous sentence first
+        prev = h[-_LOOKBACK:][::-1]  # nearest previous sentence first
         if blinded:  # empty rows still enter the window below
             for rel in discourse_for_sentence(blinded, pos, edges, lex,
                                               [p[2] for p in prev]):
@@ -436,12 +439,7 @@ def _discourse_py(con, rows, rt):
                              rel["conn_start"], rel["conn_end"],
                              rel["sense"], rel["arg2_head"], a1t, a1s,
                              rel["arg1_head"]))
-        mh = next((i for i, p in enumerate(pos) if p.startswith("V")),
-                  None)
-        if mh is None:
-            mh = next((i for i, p in enumerate(pos) if p.startswith("N")),
-                      None)
-        h.append((ti, sid, 0 if mh is None else mh))
+        h.append((ti, sid, main_head(blinded, pos)))
     return disc, trip
 
 

@@ -83,6 +83,18 @@ def test_bpe_train_dries_up_early(spark):
     assert bpe_train_merges(df, n_merges=4) == []
 
 
+def test_bpe_train_frees_its_checkpoints(spark):
+    """Every round's vocabulary localCheckpoint is freed by the time the
+    merge list returns (DataFrame.unpersist cannot free them)."""
+    from nlp_lib_spark.operators.canonicalize import _persistent_ids
+    sc = spark.sparkContext
+    df = spark.createDataFrame(_corpus(17, 40, "abc"),
+                               "doc_id long, text string")
+    before = _persistent_ids(sc)
+    assert len(bpe_train_merges(df, n_merges=4)) == 4
+    assert _persistent_ids(sc) == before
+
+
 def test_learned_table_tokenizes_docs(spark):
     docs = _corpus(7, 30, "abcd")
     df = spark.createDataFrame(docs, "doc_id long, text string")

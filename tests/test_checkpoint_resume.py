@@ -93,7 +93,7 @@ def test_kg_stages_smoke(spark, tmp_path):
 
 def test_resume_invalidates_stale_schema(spark, tmp_path):
     """Review regression: a checkpoint written by an older code version
-    (annotations without the 'pairs' column) must be recomputed on
+    (annotations without the 'discourse' column) must be recomputed on
     resume, not fed to downstream stages."""
     import pandas as pd
 
@@ -114,9 +114,9 @@ def test_resume_invalidates_stale_schema(spark, tmp_path):
     outs1 = pipe.run()
     triples1 = sorted(map(tuple, outs1["triples"].collect()))
 
-    # simulate an old-version checkpoint: drop 'pairs' from annotations
+    # simulate an old-version checkpoint: drop 'discourse' from annotations
     ann_dir = f"{root}/annotations/data"
-    old = spark.read.parquet(ann_dir).drop("pairs")
+    old = spark.read.parquet(ann_dir).drop("discourse")
     old.write.mode("overwrite").parquet(ann_dir + "_old")
     import shutil
     shutil.rmtree(ann_dir)

@@ -1,4 +1,4 @@
-"""Discourse stack: kernels + the cross-turn conversation window."""
+"""Discourse stack: kernels + the cross-turn Arg1 lookback."""
 
 from __future__ import annotations
 
@@ -86,6 +86,101 @@ def test_hor_edges_cross_turn(spark):
     assert r.arg1_subj == "TagA" and r.arg2_subj == "cotD"
     assert r.src_turn_idx == 0 and r.dst_turn_idx == 1
     assert r.sense == "Comparison"
+
+
+def _discourse_py(rows):
+    import os
+    import sys
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), os.pardir, "scripts"))
+    from dev_oracle_fuzz import _discourse_py
+    return _discourse_py(None, rows, FIXTURE_CONFIG.build())[0]
+
+
+def test_discourse_conversation_order_guard(spark):
+    """Arg1 lookback follows each conversation's (turn_idx, sent_id)
+    order whatever the input layout: turns arrive shuffled over several
+    input partitions, one conversation spans many Arrow batches, and an
+    empty turn and an oversize sentence (dropped by max_sent_tokens)
+    sit mid-conversation.  No Arg1 may point into another conversation,
+    and the pass keeps its partitions."""
+    import random
+
+    from nlp_lib_spark.fixtures import generate_transcripts
+
+    turns, _ = generate_transcripts(n_convs=6, seed=5)
+    rows = [t[:5] for t in turns]
+    oversize = " ".join(["w"] * (FIXTURE_CONFIG.max_sent_tokens + 5)) + " ."
+    for ti in range(14):
+        if ti == 4:
+            text = ""
+        elif ti == 7:
+            text = (f"however , TagA binds GerE . {oversize} "
+                    "moreover , cotD activates p53 .")
+        else:
+            text = (f"{'however' if ti % 2 else 'moreover'} , p21 "
+                    f"activates MyoD . TagA interacts with GerE .")
+        rows.append(("long", ti, "user", text, None))
+    # conversations that open on a connective and sort after others:
+    # with 5 partitions two of them share one, so a history that leaked
+    # across conv_id would hand the later one a foreign Arg1
+    rows += [(f"z{i}", 0, "user", "however , p21 activates MyoD .", None)
+             for i in range(6)]
+    random.Random(3).shuffle(rows)
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text",
+                                    "tool"])).repartition(5)
+    assert df.rdd.getNumPartitions() > 1
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        ann = annotate_turns(df, FIXTURE_CONFIG).localCheckpoint()
+        # an explicit partition count: AQE may not coalesce the pass
+        n_parts = ann.rdd.getNumPartitions()
+        got = sorted(tuple(r) for r in discourse_relations(ann).collect())
+        sents = {(r.conv_id, r.turn_idx, r.sent_id)
+                 for r in ann.select("conv_id", "turn_idx",
+                                     "sent_id").collect()}
+    finally:
+        spark.conf.set(key, old)
+
+    assert n_parts == df.rdd.getNumPartitions()
+    assert sorted(_discourse_py(rows)) == got
+    long_rows = [r for r in got if r[0] == "long"]
+    assert len(long_rows) == 14  # 13 non-empty turns, turn 7 has two
+    # the oversize sentence (7, 1) emits no row: the relation after it
+    # resolves its sentence-initial Arg1 to (7, 0); the empty turn 4 is
+    # skipped the same way
+    assert ("long", 7, 2) in {r[:3] for r in long_rows}
+    assert ("long", 7, 1) not in sents
+    assert {(r[8], r[9]) for r in long_rows if r[:3] == ("long", 7, 2)} \
+        == {(7, 0)}
+    assert {(r[8], r[9]) for r in long_rows if r[:3] == ("long", 5, 0)} \
+        == {(3, 1)}
+    for r in got:
+        if r[8] >= 0:
+            assert (r[0], r[8], r[9]) in sents
+            assert (r[8], r[9]) <= (r[1], r[2])
+
+
+def test_staged_layers_explode_without_python(spark, tmp_path):
+    """triples_from_annotations and discourse_relations over a
+    checkpointed annotations table plan no Python and no Window."""
+    from nlp_lib_spark.operators.extract import triples_from_annotations
+
+    path = str(tmp_path / "ann")
+    annotate_turns(_fixture_df(spark), FIXTURE_CONFIG).write.parquet(path)
+    ann = spark.read.parquet(path)
+    for df in (triples_from_annotations(ann), discourse_relations(ann)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Generate" in plan, plan
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                     "Window"):
+            assert node not in plan, plan
+    assert discourse_relations(ann).count() == 1
+    assert triples_from_annotations(ann).count() == 3
 
 
 def test_connective_features_dep_block():
