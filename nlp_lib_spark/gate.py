@@ -3092,9 +3092,11 @@ def q_kg_discourse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_hor_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nlp_lib_spark.operators.discourse import (discourse_relations,
                                                    hor_edges)
+    from nlp_lib_spark.operators.extract import triples_from_annotations
     t = transcripts(spark, sf_dir, with_ts=False)
-    disc = discourse_relations(annotate_turns(t, TESTDATA_CONFIG))
-    return hor_edges(disc, extract_triples(t, TESTDATA_CONFIG))
+    # one annotation pass feeds the discourse args and both triple sides
+    ann = annotate_turns(t, TESTDATA_CONFIG).localCheckpoint()
+    return hor_edges(discourse_relations(ann), triples_from_annotations(ann))
 
 
 @functools.lru_cache(maxsize=None)

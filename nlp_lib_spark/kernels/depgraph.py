@@ -3,9 +3,15 @@
 Functional re-expression of ``ling/SimpleDepGraph.java`` (which stores a
 flat edge list and does a linear scan per query — its own ``TODO`` at
 java:35 — and BFS over an adjacency *matrix*, java:196-242). We index
-adjacency once per sentence and run dict-of-lists BFS; same results,
-linear cost, which matters because these kernels run per candidate pair
-at 10^12-turn scale.
+edges by governor and by dependent once per sentence; the undirected
+adjacency that path and reachability queries walk is built only when one
+of them runs.  Same results, linear cost, which matters because these
+kernels run per candidate pair at 10^12-turn scale.
+
+Reln patterns are Java ``String.matches`` regexes (full match).  Each
+pattern's verdict per reln is kept in a module-level ``match_table``:
+dependency labels are a closed vocabulary, so a reln is matched against a
+pattern once per process instead of once per edge visit.
 
 Edge = (reln, gov, dep) with 0-based token indices.
 Path labels follow the reference convention: traversing an edge from gov
@@ -20,15 +26,36 @@ from collections import deque
 
 Edge = tuple[str, int, int]  # (reln, gov, dep)
 
-_PAT_CACHE: dict[str, "re.Pattern[str]"] = {}
+# verdicts kept per table; a parse whose reln vocabulary is larger still
+# gets exact answers, recomputed for the relns past the bound
+_MAX_RELNS = 4096
 
 
-def _pat(pattern: str) -> "re.Pattern[str]":
-    p = _PAT_CACHE.get(pattern)
-    if p is None:
-        p = re.compile(pattern)
-        _PAT_CACHE[pattern] = p
-    return p
+class _MatchTable(dict):
+    """reln -> whether the table's pattern fullmatches it."""
+
+    __slots__ = ("_fullmatch",)
+
+    def __init__(self, pattern: str):
+        super().__init__()
+        self._fullmatch = re.compile(pattern).fullmatch
+
+    def __missing__(self, reln: str) -> bool:
+        hit = self._fullmatch(reln) is not None
+        if len(self) < _MAX_RELNS:
+            self[reln] = hit
+        return hit
+
+
+_TABLES: dict[str, _MatchTable] = {}
+
+
+def match_table(pattern: str) -> _MatchTable:
+    """The shared reln -> bool table of ``pattern`` (``table[reln]``)."""
+    t = _TABLES.get(pattern)
+    if t is None:
+        t = _TABLES[pattern] = _MatchTable(pattern)
+    return t
 
 
 class DepGraph:
@@ -36,20 +63,22 @@ class DepGraph:
 
     def __init__(self, edges: list[Edge]):
         self.edges = list(edges)
-        self._by_gov: dict[int, list[Edge]] = {}
-        self._by_dep: dict[int, list[Edge]] = {}
-        self._adj: dict[int, list[tuple[int, str]]] = {}
+        by_gov: dict[int, list[Edge]] = {}
+        by_dep: dict[int, list[Edge]] = {}
         for e in self.edges:
-            reln, gov, dep = e
-            self._by_gov.setdefault(gov, []).append(e)
-            self._by_dep.setdefault(dep, []).append(e)
-            self._adj.setdefault(gov, []).append((dep, reln))
-            self._adj.setdefault(dep, []).append((gov, "-" + reln))
-        # sort adjacency once (deterministic BFS tie-break) instead of per
-        # BFS visit — the rules call path BFS per candidate pair, and the
-        # per-visit sorted() dominated the hot-path profile
-        for lst in self._adj.values():
-            lst.sort()
+            es = by_gov.get(e[1])
+            if es is None:
+                by_gov[e[1]] = [e]
+            else:
+                es.append(e)
+            es = by_dep.get(e[2])
+            if es is None:
+                by_dep[e[2]] = [e]
+            else:
+                es.append(e)
+        self._by_gov = by_gov
+        self._by_dep = by_dep
+        self._adj: dict[int, list[tuple[int, str]]] | None = None
         # per-source BFS predecessor-map memo: one BFS serves every
         # destination, so the O(pairs) path queries of rules 1/2/3 and
         # the feature pipes cost O(sources) BFS runs per sentence (the
@@ -57,30 +86,48 @@ class DepGraph:
         # flags this as the dominant redundant recompute)
         self._prevs: dict[int, dict[int, tuple[int, str]]] = {}
 
+    def _adjacency(self) -> dict[int, list[tuple[int, str]]]:
+        """Undirected neighbour lists, each sorted once (deterministic BFS
+        tie-break) instead of per BFS visit."""
+        adj = self._adj
+        if adj is None:
+            adj = {}
+            for reln, gov, dep in self.edges:
+                adj.setdefault(gov, []).append((dep, reln))
+                adj.setdefault(dep, []).append((gov, "-" + reln))
+            for lst in adj.values():
+                lst.sort()
+            self._adj = adj
+        return adj
+
     # ---- edge selections (SimpleDepGraph.java:244-317) ----
     def gov_edges(self, gov: int, pattern: str | None = None) -> list[Edge]:
-        es = self._by_gov.get(gov, [])
+        es = self._by_gov.get(gov)
+        if es is None:
+            return []
         if pattern is None:
             return es
-        p = _pat(pattern)
-        return [e for e in es if p.fullmatch(e[0])]
+        m = match_table(pattern)
+        return [e for e in es if m[e[0]]]
 
     def dep_edges(self, dep: int, pattern: str | None = None) -> list[Edge]:
-        es = self._by_dep.get(dep, [])
+        es = self._by_dep.get(dep)
+        if es is None:
+            return []
         if pattern is None:
             return es
-        p = _pat(pattern)
-        return [e for e in es if p.fullmatch(e[0])]
+        m = match_table(pattern)
+        return [e for e in es if m[e[0]]]
 
     def edges_matching(self, pattern: str) -> list[Edge]:
-        p = _pat(pattern)
-        return [e for e in self.edges if p.fullmatch(e[0])]
+        m = match_table(pattern)
+        return [e for e in self.edges if m[e[0]]]
 
     def dependents(self, gov: int) -> list[int]:
-        return [e[2] for e in self._by_gov.get(gov, [])]
+        return [e[2] for e in self._by_gov.get(gov, ())]
 
     def parent(self, dep: int) -> int:
-        es = self._by_dep.get(dep, [])
+        es = self._by_dep.get(dep)
         return es[0][1] if es else -1
 
     # ---- shortest path (SimpleDepGraph.java:190-242 / getPathAsList) ----
@@ -91,11 +138,12 @@ class DepGraph:
         are unaffected) while serving every destination from one run."""
         pm = self._prevs.get(src)
         if pm is None:
+            adj = self._adjacency()
             pm = {src: (-1, "")}
             q = deque([src])
             while q:
                 v = q.popleft()
-                for (nxt, lab) in self._adj.get(v, ()):
+                for (nxt, lab) in adj.get(v, ()):
                     if nxt not in pm:
                         pm[nxt] = (v, lab)
                         q.append(nxt)
@@ -160,7 +208,7 @@ class DepGraph:
                 v = q.popleft()
                 if v == dst:
                     break
-                nbrs = sorted((e[2], e[0]) for e in self._by_gov.get(v, []))
+                nbrs = sorted((e[2], e[0]) for e in self._by_gov.get(v, ()))
                 for (nxt, lab) in nbrs:
                     if nxt not in prev:
                         prev[nxt] = (v, lab)
@@ -193,7 +241,8 @@ class DepGraph:
         restrict traversal to matching edges.  The source node itself is
         not returned (the reference includes it; callers needing it add
         ``| {src}``)."""
-        p = _pat(skip_pattern) if skip_pattern is not None else None
+        skip = match_table(skip_pattern) if skip_pattern is not None else None
+        adj = None if directed else self._adjacency()
         seen = {src}
         q = deque([(src, 0)])
         while q:
@@ -201,11 +250,11 @@ class DepGraph:
             if d == max_dist:
                 continue
             if directed:
-                nbrs = [(e[2], e[0]) for e in self._by_gov.get(v, [])]
+                nbrs = [(e[2], e[0]) for e in self._by_gov.get(v, ())]
             else:
-                nbrs = self._adj.get(v, [])
+                nbrs = adj.get(v, [])
             for nxt, lab in nbrs:
-                if p is not None and p.fullmatch(lab.lstrip("-")):
+                if skip is not None and skip[lab.lstrip("-")]:
                     continue
                 if nxt not in seen:
                     seen.add(nxt)

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import re
 
-from nlp_lib_spark.kernels.depgraph import DepGraph, Edge, _pat
+from nlp_lib_spark.kernels.depgraph import DepGraph, Edge, match_table
 
 # Relex.java:37-43
 _PASSIVE1 = re.compile(
@@ -174,7 +174,7 @@ def explore(g: DepGraph, start: int, reln_pat: str, n: int) -> list[int]:
     """DFS preorder over governed edges with label whitelist, including
     start (Relex.explore, java:493-502). Order is load-bearing: callers
     take the FIRST reachable LEXE-B token."""
-    p = _pat(reln_pat)
+    follow = match_table(reln_pat)
     visited = [False] * n
     out: list[int] = []
 
@@ -182,7 +182,7 @@ def explore(g: DepGraph, start: int, reln_pat: str, n: int) -> list[int]:
         visited[i] = True
         out.append(i)
         for reln, gov, dep in g.gov_edges(i):
-            if not visited[dep] and p.fullmatch(reln):
+            if not visited[dep] and follow[reln]:
                 rec(dep)
 
     rec(start)

@@ -49,6 +49,18 @@ class KGConfig:
     max_sent_tokens: int = 256
     max_mentions: int = 64
 
+    def __post_init__(self) -> None:
+        # a bare str would be iterated as one-letter lexicon entries, and a
+        # bound below 1 drops every sentence (or skips every pair rule)
+        for name in ("entity_names", "domain_terms"):
+            if isinstance(getattr(self, name), str):
+                raise TypeError(f"KGConfig.{name} must be a sequence of "
+                                f"strings, not a str")
+        for name in ("max_sent_tokens", "max_mentions"):
+            if getattr(self, name) < 1:
+                raise ValueError(f"KGConfig.{name} must be >= 1, got "
+                                 f"{getattr(self, name)!r}")
+
     def build(self) -> "KGRuntime":
         return KGRuntime(self)
 

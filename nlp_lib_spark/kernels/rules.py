@@ -7,15 +7,26 @@ machinery of their base class (``relx/ppi/RelexRule.java:24-162``).
 
 Every function is pure over (tokens, pos, domain, DepGraph); rules run
 per-sentence inside Arrow UDF batches with zero cross-row dependencies.
-Java ``String.matches`` = full match -> ``re.fullmatch``;
-``Matcher.find`` -> ``re.search``.
+Java ``String.matches`` = full match, read from the reln's
+``depgraph.match_table`` entry (a literal pattern such as ``neg`` is an
+equality test); ``Matcher.find`` -> ``re.search``.
+
+The rule bodies read the sentence's edge index (``DepGraph._by_gov`` /
+``_by_dep``) and ``Sent.proteins`` directly, and skip work that cannot
+produce a pair (rule1 without an ``nsubj|nsubjpass`` seed or without
+agents for it, rule3(a) with fewer than two ``prep_between`` edges, rule5
+on a token without two ``PROTEIN`` markers).  The reference enumerates
+every maximal DFS path and then scans each path's prefixes; rules 1 and 2
+instead score each prefix once, on the way back up the DFS, and only when
+some maximal path below it was reached (a branch that only runs into
+visited nodes records no path, so it contributes no pair).
 """
 
 from __future__ import annotations
 
 import re
 
-from nlp_lib_spark.kernels.depgraph import DepGraph, Edge, _pat
+from nlp_lib_spark.kernels.depgraph import DepGraph, Edge, match_table
 
 # RelexRule1.java:26-28
 _R1_PATH = r"dep|agent|.*comp|.*obj|advcl|(inf|part|rc)mod|prep.*|abbrev|parataxis"
@@ -31,25 +42,39 @@ _R2B_RE = re.compile(r"(PREP|REL|N)+(PREP)(REL|PREP|N)*PROT1(REL|N|PREP|PROT)+PR
 _R3_REACH = r"agent|prep_(of|by|to|on|for|in|through|with|between)|nn|amod"
 # RelexRule5.java:20
 _R5_RE = re.compile(r"PROTEIN[0-9]+.*PROTEIN[0-9]+")
-_R1_PREP_AGENT_RE = re.compile(r"prep_(of|from|like|including|in)")
-_R1_RCHEAD_RE = re.compile(r"similar|include(s|d)?|members?|identical|involve(s|d)?")
+_R1_RCHEAD_RE = re.compile(_R1_RCHEAD)
 _R2B_PREP_WORDS = frozenset(("of", "by", "to", "on", "for", "in", "through", "with"))
 _R5_GOV_RELNS = frozenset(("nn", "amod", "abbrev", "appos"))
+_NP_CHUNK_RELNS = frozenset(("nn", "amod", "advmod"))  # RelexRule.java:151
+
+_R1_PATH_T = match_table(_R1_PATH)
+_R1_AGENT_T = match_table(_R1_AGENT_NP)
+_R1_TARGET_T = match_table(_R1_TARGET_NP)
+_R1_PREP_SEED_T = match_table(r"prep.*|partmod")
+_R1_PREP_PATH_T = match_table(r"prep.*|agent|dobj|dep")
+_R1_AGENT_PREP_PATH_T = match_table(r"prep.*|agent|dobj")
+_R1_PREP_AGENT_T = match_table(r"prep_(of|from|like|including|in)")
+_R1_RC_PATH_T = match_table(r".*obj|prep.*")
+_R2_PREP_T = match_table(_R2_PREP)
+_R2_NP_T = match_table(_R2_NP)
+_R3_REACH_T = match_table(_R3_REACH)
+_CONJ_T = match_table(r"conj.*")
 
 Pair = tuple[int, int]
 
 
 class Sent:
-    """Per-sentence bundle the rules read (tokens + POS + DOMAIN tags)."""
+    """Per-sentence bundle the rules read (tokens + POS + DOMAIN tags),
+    plus the ascending PROTEIN token positions."""
 
-    __slots__ = ("tokens", "pos", "domain", "_r2b_base")
+    __slots__ = ("tokens", "pos", "domain", "proteins")
 
     def __init__(self, tokens: list[str], pos: list[str],
                  domain: list[str | None]):
         self.tokens = tokens
         self.pos = pos
         self.domain = domain
-        self._r2b_base: list[str] | None = None
+        self.proteins = [i for i, t in enumerate(tokens) if "PROTEIN" in t]
 
     def __len__(self) -> int:
         return len(self.tokens)
@@ -59,149 +84,117 @@ class Sent:
 
 
 # ---------------------------------------------------------------- base class
-def _add_path(gov: int, g: DepGraph, cur: list[Edge],
-              paths: list[list[Edge]], path_pat: str, visited: set[int]) -> None:
+def _add_path(gov: int, by_gov: dict, cur: list[Edge],
+              paths: list[list[Edge]], path_t, visited: set[int]) -> None:
     # RelexRule.java:58-76
     if gov in visited:
         return
     visited.add(gov)
-    nxt = g.gov_edges(gov, path_pat)
+    nxt = [e for e in by_gov.get(gov, ()) if path_t[e[0]]]
     if not nxt:
         paths.append(list(cur))
     else:
         for e in nxt:
             cur.append(e)
-            _add_path(e[2], g, cur, paths, path_pat, visited)
+            _add_path(e[2], by_gov, cur, paths, path_t, visited)
             cur.pop()
     visited.discard(gov)
 
 
-def _paths_from_src(s: Sent, start: int, start_pat: str, g: DepGraph,
-                    path_pat: str) -> list[list[Edge]]:
+def _paths_from_src(start: int, seed_t, by_gov: dict,
+                    path_t) -> list[list[Edge]]:
     # RelexRule.java:24-35 (explores from seed.dep)
     paths: list[list[Edge]] = []
-    for seed in g.gov_edges(start, start_pat):
-        _add_path(seed[2], g, [seed], paths, path_pat, set())
+    for seed in by_gov.get(start, ()):
+        if seed_t[seed[0]]:
+            _add_path(seed[2], by_gov, [seed], paths, path_t, set())
     return paths
 
 
-def _all_paths_from_dep(s: Sent, g: DepGraph, start_pat: str,
-                        path_pat: str) -> list[list[Edge]]:
-    # RelexRule.java:46-56 (explores from seed.dep)
-    paths: list[list[Edge]] = []
-    for seed in g.edges_matching(start_pat):
-        _add_path(seed[2], g, [seed], paths, path_pat, set())
-    return paths
-
-
-def _all_paths_from_gov(s: Sent, g: DepGraph, start_pat: str,
-                        path_pat: str) -> list[list[Edge]]:
-    # RelexRule1.java:55-68 override (explores from seed.gov)
-    paths: list[list[Edge]] = []
-    for seed in g.edges_matching(start_pat):
-        _add_path(seed[1], g, [seed], paths, path_pat, set())
-    return paths
-
-
-def _head_entity_from_np(head: int, s: Sent, g: DepGraph, pat: str) -> int:
+def _head_entity(head: int, tokens: list[str], by_gov: dict, np_t) -> int:
     # RelexRule.java:86-104 — rightmost PROTEIN among head + matching deps
-    reachable = [head] + [e[2] for e in g.gov_edges(head, pat)]
-    entity = -1
-    for p in reachable:
-        if s.is_protein(p) and p > entity:
-            entity = p
+    entity = head if "PROTEIN" in tokens[head] else -1
+    for e in by_gov.get(head, ()):
+        if np_t[e[0]] and "PROTEIN" in tokens[e[2]] and e[2] > entity:
+            entity = e[2]
     return entity
 
 
-def _entities_from_np(head: int, s: Sent, g: DepGraph, pat: str) -> list[int]:
+def _entities(head: int, tokens: list[str], g: DepGraph, np_t) -> list[int]:
     # RelexRule.java:114-147
-    agents: list[int] = []
-    agent = _head_entity_from_np(head, s, g, pat)
+    by_gov = g._by_gov
+    agent = _head_entity(head, tokens, by_gov, np_t)
     if agent != -1:
-        agents.append(agent)
+        agents = [agent]
         if agent != head:
-            for e in g.dep_edges(agent, r"conj.*"):
-                nxt = _head_entity_from_np(e[1], s, g, pat)
-                if nxt != -1:
-                    agents.append(nxt)
-    if not agents:
-        for e in g.gov_edges(head, r"appos"):
-            a = _head_entity_from_np(e[2], s, g, pat)
+            for e in g._by_dep.get(agent, ()):
+                if _CONJ_T[e[0]]:
+                    nxt = _head_entity(e[1], tokens, by_gov, np_t)
+                    if nxt != -1:
+                        agents.append(nxt)
+        return agents
+    agents = []
+    for e in by_gov.get(head, ()):
+        if e[0] == "appos":
+            a = _head_entity(e[2], tokens, by_gov, np_t)
             if a != -1:
                 agents.append(a)
     return agents
 
 
-def _np_chunk(pos: int, s: Sent, g: DepGraph) -> tuple[int, int]:
-    # RelexRule.java:149-162
-    es = g.gov_edges(pos, r"nn|amod|advmod") + g.dep_edges(pos, r"nn|amod|advmod")
-    lo = hi = pos
-    for reln, gv, dp in es:
-        lo = min(lo, gv, dp)
-        hi = max(hi, gv, dp)
-    return lo, hi
+def _chunk_has_domain(p: int, domain: list, g: DepGraph) -> bool:
+    # RelexRule.getNPChunk (java:149-162): the span of p and its
+    # nn|amod|advmod neighbours, either direction; any DOMAIN token in it
+    lo = hi = p
+    for e in g._by_gov.get(p, ()):
+        if e[0] in _NP_CHUNK_RELNS:
+            d = e[2]
+            if d < lo:
+                lo = d
+            elif d > hi:
+                hi = d
+    for e in g._by_dep.get(p, ()):
+        if e[0] in _NP_CHUNK_RELNS:
+            d = e[1]
+            if d < lo:
+                lo = d
+            elif d > hi:
+                hi = d
+    for i in range(lo, hi + 1):
+        if domain[i] is not None:
+            return True
+    return False
 
 
 # ------------------------------------------------------------------- Rule 1
-def _r1_is_negated(g: DepGraph, path: list[Edge], end: int) -> bool:
-    # RelexRule1.java:214-226
-    for i in range(end + 1):
-        _, gov, dep = path[i]
-        if g.gov_edges(gov, r"neg") or g.gov_edges(dep, r"neg"):
-            return True
-    return False
-
-
-def _r1_chunk_has_domain(s: Sent, chunk: tuple[int, int]) -> bool:
-    lo, hi = chunk
-    return any(s.domain[i] is not None for i in range(lo, hi + 1))
-
-
-def _r1_is_domain_specific(s: Sent, g: DepGraph, path: list[Edge], end: int) -> bool:
-    # RelexRule1.java:238-256
-    for i in range(end + 1):
-        _, gov, dep = path[i]
-        if s.domain[gov] is not None or s.domain[dep] is not None:
-            return True
-        if i == 0:
-            if _r1_chunk_has_domain(s, _np_chunk(dep, s, g)):
-                return True
-        else:
-            if _r1_chunk_has_domain(s, _np_chunk(gov, s, g)):
-                return True
-            if i == end:
-                if _r1_chunk_has_domain(s, _np_chunk(dep, s, g)):
-                    return True
-                break
-    return False
-
-
-def _r1_agents(subj: int, s: Sent, g: DepGraph, path: list[Edge]) -> set[int]:
+def _r1_agents(subj: int, main_head: int, s: Sent, g: DepGraph) -> set[int]:
     # RelexRule1.java:104-166
-    agents: set[int] = set(_entities_from_np(subj, s, g, _R1_AGENT_NP))
+    tokens, by_gov = s.tokens, g._by_gov
+    agents: set[int] = set(_entities(subj, tokens, g, _R1_AGENT_T))
 
-    prep_paths = _paths_from_src(s, subj, r"prep.*|partmod", g,
-                                 r"prep.*|agent|dobj|dep")
+    prep_paths = _paths_from_src(subj, _R1_PREP_SEED_T, by_gov,
+                                 _R1_PREP_PATH_T)
     for agent in list(agents):
         if agent != subj:
-            prep_paths.extend(_paths_from_src(s, agent, r"prep.*|partmod", g,
-                                              r"prep.*|agent|dobj"))
+            prep_paths.extend(_paths_from_src(agent, _R1_PREP_SEED_T, by_gov,
+                                              _R1_AGENT_PREP_PATH_T))
     for path2 in prep_paths:
         prep_head = -1
         for reln, gv, dp in path2:
-            if _R1_PREP_AGENT_RE.fullmatch(reln):
-                prep_head = max(prep_head, dp)
+            if _R1_PREP_AGENT_T[reln] and dp > prep_head:
+                prep_head = dp
         if prep_head != -1:
-            agents.update(_entities_from_np(prep_head, s, g, _R1_AGENT_NP))
+            agents.update(_entities(prep_head, tokens, g, _R1_AGENT_T))
 
-    main_head = path[0][1] if path else -1
-    for e in g.gov_edges(subj, r"rcmod"):
+    for e in by_gov.get(subj, ()):
+        if e[0] != "rcmod":
+            continue
         dep = e[2]
-        rc_head = s.tokens[dep].lower()
-        if dep != main_head and _R1_RCHEAD_RE.fullmatch(rc_head):
-            for rp in _paths_from_src(s, dep, r".*obj|prep.*", g, r".*obj|prep.*"):
+        if dep != main_head and _R1_RCHEAD_RE.fullmatch(tokens[dep].lower()):
+            for rp in _paths_from_src(dep, _R1_RC_PATH_T, by_gov,
+                                      _R1_RC_PATH_T):
                 for t in rp:
-                    tmp = _entities_from_np(t[2], s, g, _R1_AGENT_NP)
+                    tmp = _entities(t[2], tokens, g, _R1_AGENT_T)
                     if tmp:
                         agents.update(tmp)
                         break
@@ -209,141 +202,211 @@ def _r1_agents(subj: int, s: Sent, g: DepGraph, path: list[Edge]) -> set[int]:
 
 
 def rule1(s: Sent, g: DepGraph) -> set[Pair]:
-    # RelexRule1.findRelations (java:36-39) over nsubj|nsubjpass seeds
+    """RelexRule1.findRelations (java:36-39, 167-256) over nsubj|nsubjpass
+    seeds.  Each path from the seed verb (the seed edge is path[0]) scores
+    its NN-headed edges i >= 1 as targets; target (e, i) pairs with every
+    agent of the seed's subject when path[:i+1] is domain-specific (a
+    DOMAIN endpoint or NP chunk — the dependent's chunk for edge 0, the
+    governor's for later edges — or DOMAIN in edge i's dependent chunk)
+    and not negated (no ``neg`` governed by an endpoint).  An ``rcmod``
+    edge whose head is neither an RC head word nor DOMAIN ends the target
+    scan of every path through it."""
     out: set[Pair] = set()
-    for path in _all_paths_from_gov(s, g, r"nsubj|nsubjpass", _R1_PATH):
-        agents = _r1_agents(path[0][2], s, g, path)
+    seeds = [e for e in g.edges if e[0] == "nsubj" or e[0] == "nsubjpass"]
+    if not seeds:
+        return out
+    tokens, pos, domain = s.tokens, s.pos, s.domain
+    by_gov = g._by_gov
+    neg: set[int] | None = None
+    visited: set[int] = set()
+    agents: set[int] = set()
+
+    def walk(node: int, dom_spec: bool, negated: bool, stopped: bool) -> bool:
+        # _addPath from ``node``; True when it records a path
+        if node in visited:
+            return False
+        nxt = [e for e in by_gov.get(node, ()) if _R1_PATH_T[e[0]]]
+        if not nxt:
+            return True
+        visited.add(node)
+        recorded = False
+        for reln, gv, head in nxt:
+            d = (dom_spec or domain[gv] is not None
+                 or domain[head] is not None
+                 or _chunk_has_domain(gv, domain, g))
+            n = negated or gv in neg or head in neg
+            st = stopped or (
+                reln == "rcmod" and domain[head] is None
+                and not _R1_RCHEAD_RE.fullmatch(tokens[head].lower()))
+            if walk(head, d, n, st):
+                recorded = True
+                if not st and not n and pos[head].startswith("NN") and (
+                        d or _chunk_has_domain(head, domain, g)):
+                    for t in _entities(head, tokens, g, _R1_TARGET_T):
+                        for a in agents:
+                            out.add((a, t) if a < t else (t, a))
+        visited.discard(node)
+        return recorded
+
+    for _, verb, subj in seeds:
+        agents = _r1_agents(subj, verb, s, g)
         if not agents:
             continue
-        # targets (java:167-193)
-        targets: set[Pair] = set()
-        for i in range(1, len(path)):
-            reln, gv, head = path[i][0], path[i][1], path[i][2]
-            if reln == "rcmod":
-                rc_head = s.tokens[head].lower()
-                if not _R1_RCHEAD_RE.fullmatch(rc_head) and s.domain[head] is None:
-                    break
-            if not s.pos[head].startswith("NN"):
-                continue
-            for e in _entities_from_np(head, s, g, _R1_TARGET_NP):
-                targets.add((e, i))
-        for tgt, idx in targets:
-            if _r1_is_domain_specific(s, g, path, idx) and \
-               not _r1_is_negated(g, path[:idx + 1], idx):
-                for agent in agents:
-                    out.add((agent, tgt) if agent < tgt else (tgt, agent))
+        if neg is None:
+            neg = {e[1] for e in g.edges if e[0] == "neg"}
+        walk(verb,
+             domain[verb] is not None or domain[subj] is not None
+             or _chunk_has_domain(subj, domain, g),
+             verb in neg or subj in neg, False)
     return out
 
 
 # ------------------------------------------------------------------- Rule 2
-def _r2_is_domain_specific(s: Sent, g: DepGraph, path: list[Edge]) -> bool:
-    # RelexRule2.java:86-122 (note: the else-branch checks token at the
-    # *path index* i — a reference quirk we replicate)
-    for i, (reln, gov, dep) in enumerate(path):
-        gov_pos = s.pos[gov]
-        if gov_pos.startswith("N"):
-            lo, hi = _np_chunk(gov, s, g)
-            for j in range(lo, hi + 1):
-                if s.domain[j] is not None:
-                    return True
-        elif i < len(s.tokens) and s.domain[i] is not None:
-            return True
-    return False
-
-
 def rule2(s: Sent, g: DepGraph) -> set[Pair]:
+    """RelexRule2 (java:21-122): prep-chain paths from every
+    ``_R2_PREP`` seed's dependent; each NN-NN edge i pairs its endpoints'
+    NP entities when path[:i+1] is domain-specific: some edge k <= i has
+    an N-tagged governor whose NP chunk holds DOMAIN, or else a DOMAIN
+    token at the *path index* k (a reference quirk, java:115)."""
     out: set[Pair] = set()
-    for path in _all_paths_from_dep(s, g, _R2_PREP, _R2_PREP):
-        for i, (reln, gov, dep) in enumerate(path):
-            if not s.pos[gov].startswith("NN") or \
-               not s.pos[dep].startswith("NN"):
-                continue
-            agents = set(_entities_from_np(gov, s, g, _R2_NP))
-            targets = set(_entities_from_np(dep, s, g, _R2_NP))
-            if not agents or not targets:
-                continue
-            if not _r2_is_domain_specific(s, g, path[:i + 1]):
-                continue
-            for a in agents:
-                for t in targets:
-                    out.add((a, t) if a < t else (t, a))
+    seeds = [e for e in g.edges if _R2_PREP_T[e[0]]]
+    if not seeds:
+        return out
+    tokens, pos, domain = s.tokens, s.pos, s.domain
+    by_gov = g._by_gov
+    n_tok = len(tokens)
+    visited: set[int] = set()
+
+    def edge_dom(k: int, gv: int) -> bool:
+        if pos[gv].startswith("N"):
+            return _chunk_has_domain(gv, domain, g)
+        return k < n_tok and domain[k] is not None
+
+    def score(gv: int, dp: int) -> None:
+        if pos[gv].startswith("NN") and pos[dp].startswith("NN"):
+            agents = _entities(gv, tokens, g, _R2_NP_T)
+            if agents:
+                targets = _entities(dp, tokens, g, _R2_NP_T)
+                for a in agents:
+                    for t in targets:
+                        out.add((a, t) if a < t else (t, a))
+
+    def walk(node: int, k: int, dom_spec: bool) -> bool:
+        # _addPath from ``node``, whose next edge is path index k
+        if node in visited:
+            return False
+        nxt = [e for e in by_gov.get(node, ()) if _R2_PREP_T[e[0]]]
+        if not nxt:
+            return True
+        visited.add(node)
+        recorded = False
+        for reln, gv, dp in nxt:
+            d = dom_spec or edge_dom(k, gv)
+            if walk(dp, k + 1, d):
+                recorded = True
+                if d:
+                    score(gv, dp)
+        visited.discard(node)
+        return recorded
+
+    for _, gv, dp in seeds:
+        d = edge_dom(0, gv)
+        if walk(dp, 1, d) and d:
+            score(gv, dp)
     return out
 
 
 # ------------------------------------------------------------------ Rule 2b
-def _r2b_base_classes(s: Sent) -> list[str]:
-    """Pair-independent token classes for RelexRule2b.getSentPattern
-    (RelexRule2b.java:38-64), computed once per sentence — only the two
-    entity positions differ per pair, so the O(n) class scan must not
-    rerun for each of the O(n^2) candidate pairs."""
-    if s._r2b_base is None:
-        parts: list[str] = []
-        for i in range(len(s.tokens)):
-            tok = s.tokens[i]
-            if "PROTEIN" in tok:
-                parts.append("PROT")
-            elif s.domain[i] is not None:
-                parts.append("REL")
-            elif len(tok) == 1 and tok in "/,-":
-                parts.append(tok)
-            elif s.pos[i] in ("IN", "TO") and tok in _R2B_PREP_WORDS:
-                parts.append("PREP")
-            elif tok in ("and", "or"):
-                parts.append("CONJ")
-            elif s.pos[i].startswith("N"):
-                parts.append("N")
-            else:
-                parts.append("W")
-        s._r2b_base = parts
-    return s._r2b_base
-
-
-def _r2b_sent_pattern(s: Sent, e1: int, e2: int) -> str:
-    # RelexRule2b.java:38-64
-    parts = _r2b_base_classes(s)[:e2 + 1]
-    parts[e1] = "PROT1"
-    parts[e2] = "PROT2"
-    return "".join(parts)
-
-
 def rule2b(s: Sent, g: DepGraph) -> set[Pair]:
+    """RelexRule2b (java:21-64): a protein pair matches when the token
+    class string up to e2, with e1/e2 as PROT1/PROT2, contains
+    ``_R2B_RE``.  The class string is built once per sentence; each pair
+    splices its two markers into it (a PROTEIN token's class is PROT)."""
     out: set[Pair] = set()
-    n = len(s)
-    for i in range(n):
-        if not s.is_protein(i):
+    prots = s.proteins
+    if len(prots) < 2:
+        return out
+    tokens, pos, domain = s.tokens, s.pos, s.domain
+    # the pattern's literal PREP sits before PROT1, and PROT2 follows it:
+    # no pair without a PREP token left of the second-to-last protein
+    for i in range(prots[-2]):
+        if domain[i] is None and pos[i] in ("IN", "TO") and \
+           tokens[i] in _R2B_PREP_WORDS:
+            break
+    else:
+        return out
+    parts: list[str] = []
+    for i in range(prots[-1] + 1):
+        tok = tokens[i]
+        if "PROTEIN" in tok:
+            parts.append("PROT")
+        elif domain[i] is not None:
+            parts.append("REL")
+        elif len(tok) == 1 and tok in "/,-":
+            parts.append(tok)
+        elif pos[i] in ("IN", "TO") and tok in _R2B_PREP_WORDS:
+            parts.append("PREP")
+        elif tok in ("and", "or"):
+            parts.append("CONJ")
+        elif pos[i].startswith("N"):
+            parts.append("N")
+        else:
+            parts.append("W")
+    text = "".join(parts)
+    first_prep = text.find("PREP")
+    starts = []
+    at = 0
+    for p in parts:
+        starts.append(at)
+        at += len(p)
+    for x, i in enumerate(prots):
+        a = starts[i]
+        if a < first_prep + 4:
             continue
-        for j in range(i + 1, n):
-            if s.is_protein(j) and _R2B_RE.search(_r2b_sent_pattern(s, i, j)):
+        head = text[:a] + "PROT1"
+        for j in prots[x + 1:]:
+            if _R2B_RE.search(head + text[a + 4:starts[j]] + "PROT2"):
                 out.add((i, j))
     return out
 
 
 # ------------------------------------------------------------------- Rule 3
-def _r3_reachables(s: Sent, g: DepGraph, idx: int, domain_specific: bool,
-                   pat: str, visited: set[int], targets: set[int]) -> None:
-    # RelexRule3.java:92-108
-    if idx in visited:
-        return
-    visited.add(idx)
-    if domain_specific and s.is_protein(idx):
-        targets.add(idx)
-    if not domain_specific and s.domain[idx] is not None:
-        domain_specific = True
-    cp = None if pat == "*" else _pat(pat)
-    for reln, gv, dp in g.gov_edges(idx):
-        if cp is None or cp.fullmatch(reln):
-            _r3_reachables(s, g, dp, domain_specific, pat, visited, targets)
+def _reach_proteins(src: int, tokens: list[str], g: DepGraph,
+                    follow) -> set[int]:
+    """PROTEIN tokens reachable from ``src`` (itself included) over
+    governed edges whose reln ``follow`` accepts — RelexRule3.getReachables
+    (java:92-108) with domainSpecific set, as every caller passes it."""
+    by_gov = g._by_gov
+    out: set[int] = set()
+    seen = {src}
+    stack = [src]
+    while stack:
+        v = stack.pop()
+        if "PROTEIN" in tokens[v]:
+            out.add(v)
+        for e in by_gov.get(v, ()):
+            d = e[2]
+            if d not in seen and follow[e[0]]:
+                seen.add(d)
+                stack.append(d)
+    return out
 
 
 def rule3(s: Sent, g: DepGraph) -> set[Pair]:
     out: set[Pair] = set()
-    n = len(s)
-    # (a) consecutive prep_between on the shortest path (java:27-42,79-89)
-    domain_term_pos = -1
-    for i in range(n):
-        if (i - domain_term_pos) < 5 and s.is_protein(i):
-            for j in range(i + 1, n):
-                if s.is_protein(j):
+    prots = s.proteins
+    if len(prots) < 2:  # every branch pairs two distinct proteins
+        return out
+    tokens, pos, domain = s.tokens, s.pos, s.domain
+    # (a) consecutive prep_between on the shortest path (java:27-42,79-89);
+    # two consecutive labels take two distinct prep_between edges
+    if sum(1 for e in g.edges if e[0] == "prep_between") >= 2:
+        domain_term_pos = -1
+        for i in range(len(tokens)):
+            if (i - domain_term_pos) < 5 and "PROTEIN" in tokens[i]:
+                for j in prots:
+                    if j <= i:
+                        continue
                     labels = g.path_labels(i, j)
                     if labels:
                         for k in range(1, len(labels)):
@@ -351,24 +414,22 @@ def rule3(s: Sent, g: DepGraph) -> set[Pair]:
                                labels[k - 1] in ("prep_between", "-prep_between"):
                                 out.add((i, j))
                                 break
-        if s.domain[i] is not None:
-            domain_term_pos = i
+            if domain[i] is not None:
+                domain_term_pos = i
     # (b) domain noun fan-out (java:44-55)
-    for i in range(n):
-        if s.pos[i].startswith("N") and s.domain[i] is not None:
-            targets: set[int] = set()
-            _r3_reachables(s, g, i, True, _R3_REACH, set(), targets)
+    for i in range(len(tokens)):
+        if domain[i] is not None and pos[i].startswith("N"):
+            targets = _reach_proteins(i, tokens, g, _R3_REACH_T)
             for e1 in targets:
-                for e2 in targets:
-                    if e1 < e2 and i < e1:
-                        out.add((e1, e2))
+                if i < e1:
+                    for e2 in targets:
+                        if e1 < e2:
+                            out.add((e1, e2))
     # (c) partmod with DOMAIN dependent (java:57-74)
-    for reln, gov, dep in g.edges_matching(r"partmod"):
-        if s.domain[dep] is not None:
-            tset: set[int] = set()
-            _r3_reachables(s, g, dep, True, _R3_REACH, set(), tset)
-            aset: set[int] = set()
-            _r3_reachables(s, g, gov, True, _R3_REACH, set(), aset)
+    for reln, gov, dep in g.edges:
+        if reln == "partmod" and domain[dep] is not None:
+            tset = _reach_proteins(dep, tokens, g, _R3_REACH_T)
+            aset = _reach_proteins(gov, tokens, g, _R3_REACH_T)
             for a in aset:
                 for t in tset:
                     if a < t:
@@ -378,16 +439,20 @@ def rule3(s: Sent, g: DepGraph) -> set[Pair]:
 
 # ------------------------------------------------------------------- Rule 5
 def rule5(s: Sent, g: DepGraph) -> set[Pair]:
+    """RelexRule5 (java:20-45): a fused ``PROTEINa..PROTEINb`` token (not
+    the last) pairs with itself when the next token or an nn|amod|abbrev|
+    appos governor is DOMAIN."""
     out: set[Pair] = set()
-    n = len(s)
-    for i in range(n):
-        if s.is_protein(i) and i < n - 1:
-            if _R5_RE.fullmatch(s.tokens[i]) and s.domain[i + 1] is not None:
+    tokens, domain = s.tokens, s.domain
+    last = len(tokens) - 1
+    for i in s.proteins:
+        tok = tokens[i]
+        if i < last and tok.count("PROTEIN") >= 2 and _R5_RE.fullmatch(tok):
+            if domain[i + 1] is not None:
                 out.add((i, i))
-            elif _R5_RE.fullmatch(s.tokens[i]):
-                for reln, gov, dep in g.dep_edges(i):
-                    if reln in _R5_GOV_RELNS and \
-                       s.domain[gov] is not None:
+            else:
+                for reln, gov, dep in g._by_dep.get(i, ()):
+                    if reln in _R5_GOV_RELNS and domain[gov] is not None:
                         out.add((i, i))
                         break
     return out
@@ -402,6 +467,7 @@ _FORM3_RE = re.compile(r"RELN\.PREP.*PROTEIN[0-9]+.*PROTEIN[0-9]+")
 _FORM4_RE = re.compile(r"PROTEIN[0-9]+([/-])?PROTEIN[0-9]+")
 _FORM5_RE = re.compile(r"PROTEIN[0-9]+.*PROTEIN[0-9]+.*REL")
 _FORM3_REACH = r"agent|prep.*|appos|abbrev|nn|amod|dep"
+_FORM3_REACH_T = match_table(_FORM3_REACH)
 
 
 def _form_sent_pattern(s: Sent, e1: int, e2: int) -> str:
@@ -467,8 +533,7 @@ def form_type(tokens: list[str], pos: list[str], domain: list[str | None],
     if _FORM3_RE.search(sp):
         for i in range(e1):
             if s.pos[i].startswith("N") and s.domain[i] is not None:
-                targets: set[int] = set()
-                _r3_reachables(s, g, i, True, _FORM3_REACH, set(), targets)
+                targets = _reach_proteins(i, s.tokens, g, _FORM3_REACH_T)
                 if e1 in targets and e2 in targets:
                     return 3
     # form 4 (java:208-224): fused token with DOMAIN right neighbor

@@ -434,7 +434,7 @@ def rules_sql_prefix(simplify: bool = True) -> str:
 q_neg AS MATERIALIZED (  -- tokens governing a neg edge (isNegated checks)
   SELECT DISTINCT sk, gov AS x FROM dep_e WHERE reln = 'neg'
 ),
-q_cdom AS MATERIALIZED (  -- NP-chunk-contains-DOMAIN per token (_np_chunk + domain scan)
+q_cdom AS MATERIALIZED (  -- NP-chunk-contains-DOMAIN per token (_chunk_has_domain)
   SELECT c.sk, c.x,
          EXISTS (SELECT 1 FROM str2 t
                  WHERE t.sk = c.sk AND t.i BETWEEN c.lo AND c.hi

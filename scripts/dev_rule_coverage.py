@@ -1,13 +1,18 @@
 """Dev harness: which rule-engine branches fire on the testdata corpus?
 
 Runs the pure-Python kernel chain over every sentence of the derived
-transcripts (no Spark) and reports per-rule pair counts, dep-edge label
-histogram, and structural facts the DuckDB rule oracles can rely on.
+transcripts (no Spark) and reports per-rule pair counts, each rule's cost
+in µs per multi-entity sentence (best of 5 timed passes; the split that
+kgbench's ``kernels.rules_us`` lumps together), dep-edge label histogram,
+and structural facts the DuckDB rule oracles can rely on.
+
+    python3 scripts/dev_rule_coverage.py [SF_DIR]
 """
 from __future__ import annotations
 
 import os
 import sys
+import time
 from collections import Counter
 
 import duckdb
@@ -40,6 +45,8 @@ fused = 0
 sents_with_pairs = 0
 overlap = Counter()
 examples = {}
+RULES = {"r1": rule1, "r2": rule2, "r2b": rule2b, "r3": rule3, "r5": rule5}
+parsed = []  # (Sent, DepGraph) of every multi-entity sentence
 for conv_id, turn_idx, role, text, tool in rows:
     if not text:
         continue
@@ -55,8 +62,8 @@ for conv_id, turn_idx, role, text, tool in rows:
         g = DepGraph(ann["edges"])
         for (r, gv, dp) in ann["edges"]:
             edge_labels[r] += 1
-        rs = {"r1": rule1(s, g), "r2": rule2(s, g), "r2b": rule2b(s, g),
-              "r3": rule3(s, g), "r5": rule5(s, g)}
+        parsed.append((s, g))
+        rs = {k: rule(s, g) for k, rule in RULES.items()}
         for k, v in rs.items():
             rule_pairs[k] += len(v)
             if v and k not in examples:
@@ -76,6 +83,20 @@ print(f"sentences={n_sent} multi-entity={n_multi} fused_tokens={fused} "
       f"sents_with_pairs={sents_with_pairs}")
 print("edge labels:", dict(edge_labels))
 print("rule pair counts:", dict(rule_pairs))
+
+
+def best_us(rule) -> float:
+    best = float("inf")
+    for _ in range(5):
+        t0 = time.perf_counter_ns()
+        for s, g in parsed:
+            rule(s, g)
+        best = min(best, time.perf_counter_ns() - t0)
+    return best / 1e3 / max(len(parsed), 1)
+
+
+print("rule us per multi-entity sentence (best of 5):",
+      {k: round(best_us(rule), 2) for k, rule in RULES.items()})
 print("unique contributions:", dict(overlap))
 for k, (sent, pairs, blinded, pos, dom, edges) in sorted(examples.items()):
     print(f"\n--- {k}: {pairs}\n  sent: {sent}\n  blinded: {blinded}\n"

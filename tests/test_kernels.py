@@ -370,3 +370,165 @@ def test_rule5_matches_verbatim_reference():
         s = Sent(toks, ["NN"] * n, dom)
         assert rule5(s, DepGraph(edges)) == \
             reference_rule5(toks, dom, edges), (toks, dom, edges)
+
+
+def test_kgconfig_rejects_corrupting_input():
+    """A bare string lexicon would be iterated as characters (a one-letter
+    gazetteer), and a bound below 1 drops every sentence or pair."""
+    import pytest
+
+    from nlp_lib_spark.kernels.pipeline import KGConfig
+
+    ok = KGConfig(entity_names=("p53",), domain_terms=("bind",))
+    assert ok.build().max_sent_tokens == 256
+    with pytest.raises(TypeError, match="entity_names"):
+        KGConfig(entity_names="p53", domain_terms=("bind",))
+    with pytest.raises(TypeError, match="domain_terms"):
+        KGConfig(entity_names=("p53",), domain_terms="bind")
+    for field in ("max_sent_tokens", "max_mentions"):
+        for bad in (0, -3):
+            with pytest.raises(ValueError, match=field):
+                KGConfig(entity_names=("p53",), domain_terms=("bind",),
+                         **{field: bad})
+    assert KGConfig(entity_names=("p53",), domain_terms=("bind",),
+                    max_sent_tokens=1, max_mentions=1).max_mentions == 1
+
+
+def test_depgraph_matches_linear_scan_replica():
+    """Seeded fuzz: every DepGraph query equals a plain linear-scan replica
+    over the edge list (no index, regex per edge), with the same
+    tie-breaks: edge-list order for edge selections, ascending
+    (node, label) neighbour order for the undirected BFS, ascending
+    (node, label) for the directed one.  Graphs carry cycles, duplicate
+    edges, self-loops and isolated tokens, with relns drawn from every
+    pattern the shipped rules use."""
+    import random
+    import re
+    from collections import deque
+
+    from nlp_lib_spark.kernels import rules as R
+
+    def sel(edges, pattern, key, node):
+        return [e for e in edges if (node is None or e[key] == node)
+                and (pattern is None or re.fullmatch(pattern, e[0]))]
+
+    def neighbours(edges, v, directed):
+        out = [(d, r) for (r, g, d) in edges if g == v]
+        if not directed:
+            out += [(g, "-" + r) for (r, g, d) in edges if d == v]
+        return sorted(out)
+
+    def bfs_prev(edges, src, dst, directed):
+        prev = {src: (-1, "")}
+        q = deque([src])
+        while q:
+            v = q.popleft()
+            if directed and v == dst:
+                break
+            for nxt, lab in neighbours(edges, v, directed):
+                if nxt not in prev:
+                    prev[nxt] = (v, lab)
+                    q.append(nxt)
+        return prev
+
+    def path(edges, src, dst, directed):
+        if src == dst:
+            return []
+        prev = bfs_prev(edges, src, dst, directed)
+        if dst not in prev:
+            return None
+        out, v = [], dst
+        while v != src:
+            p, lab = prev[v]
+            out.append((lab[1:], v, p) if lab.startswith("-") else (lab, p, v))
+            v = p
+        return out[::-1]
+
+    def labels(edges, src, dst):
+        p = path(edges, src, dst, False)
+        if p is None:
+            return None
+        out, v = [], src
+        for (r, g, d) in p:
+            out.append(r if g == v else "-" + r)
+            v = d if g == v else g
+        return out
+
+    def parent(edges, v):
+        return next((g for (r, g, d) in edges if d == v), -1)
+
+    def root_path(edges, x):
+        out, seen = [x], {x}
+        while True:
+            p = parent(edges, out[-1])
+            if p == -1 or p in seen:
+                return out
+            out.append(p)
+            seen.add(p)
+
+    def lcs(edges, a, b):
+        pb = set(root_path(edges, b))
+        return next((n for n in root_path(edges, a) if n in pb), -1)
+
+    def reach(edges, src, directed, max_dist, skip):
+        # the skip test strips every leading "-" (the reverse-direction
+        # marker), so a reln spelled "-nn" is skipped as "nn"
+        kept = [e for e in edges
+                if skip is None or not re.fullmatch(skip, e[0].lstrip("-"))]
+        dist = {src: 0}
+        q = deque([src])
+        while q:
+            v = q.popleft()
+            if dist[v] == max_dist:
+                continue
+            for nxt, _ in neighbours(kept, v, directed):
+                if nxt not in dist:
+                    dist[nxt] = dist[v] + 1
+                    q.append(nxt)
+        return set(dist) - {src}
+
+    patterns = [R._R1_PATH, R._R1_AGENT_NP, R._R1_TARGET_NP, R._R1_RCHEAD,
+                R._R2_PREP, R._R2_NP, R._R3_REACH, R._FORM3_REACH,
+                r"nsubj|nsubjpass", r"prep.*|partmod", r"prep.*|agent|dobj|dep",
+                r"prep.*|agent|dobj", r"prep_(of|from|like|including|in)",
+                r".*obj|prep.*", r"conj.*", r"neg", r"rcmod", r"partmod",
+                r"appos", r"nn|amod|advmod"]
+    relns = ["dep", "agent", "xcomp", "ccomp", "dobj", "iobj", "advcl",
+             "infmod", "partmod", "rcmod", "prep_of", "prep_by", "prep_with",
+             "prep_between", "prep_from", "prep_like", "prep_including",
+             "prep_in", "prepc_as", "abbrev", "parataxis", "nn", "amod",
+             "advmod", "appos", "conj_and", "conj", "neg", "nsubj",
+             "nsubjpass", "det", "num", "-nn", "xneg", "conj\nx"]
+    rng = random.Random(61)
+    for _ in range(300):
+        n = rng.randint(1, 9)
+        edges = []
+        for _ in range(rng.randint(0, 12)):
+            a = rng.randrange(n)
+            b = a if rng.random() < 0.1 else rng.randrange(n)
+            edges.append((rng.choice(relns), a, b))
+        if edges and rng.random() < 0.3:
+            edges.append(rng.choice(edges))
+        g = DepGraph(edges)
+        nodes = range(-1, n + 1)   # n - 1 may be isolated; -1, n never occur
+        for pat in [None] + patterns:
+            for v in nodes:
+                assert g.gov_edges(v, pat) == sel(edges, pat, 1, v)
+                assert g.dep_edges(v, pat) == sel(edges, pat, 2, v)
+            if pat is not None:
+                assert g.edges_matching(pat) == sel(edges, pat, 1, None)
+        for v in nodes:
+            assert g.parent(v) == parent(edges, v)
+        for a in range(n):
+            for b in range(n):
+                assert g.path_labels(a, b) == labels(edges, a, b)
+                assert g.path_edges(a, b) == path(edges, a, b, False)
+                assert g.path_edges(a, b, directed=True) == \
+                    path(edges, a, b, True)
+                assert g.lcs(a, b) == lcs(edges, a, b)
+            for d in (0, 1, 3, 100):
+                for skip in (None, r"nn|amod", r"prep.*", r"neg"):
+                    for directed in (True, False):
+                        assert g.reachable(a, directed, d, skip) == \
+                            reach(edges, a, directed, d, skip), \
+                            (edges, a, directed, d, skip)
