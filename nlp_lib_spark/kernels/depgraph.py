@@ -59,7 +59,11 @@ def match_table(pattern: str) -> _MatchTable:
 
 
 class DepGraph:
-    __slots__ = ("edges", "_by_gov", "_by_dep", "_adj", "_prevs")
+    """One sentence's edges, indexed by governor (``by_gov``) and by
+    dependent (``by_dep``); each index keeps edge-list order per node.
+    Callers treat the indexes as read-only."""
+
+    __slots__ = ("edges", "by_gov", "by_dep", "_adj", "_prevs")
 
     def __init__(self, edges: list[Edge]):
         self.edges = list(edges)
@@ -76,8 +80,8 @@ class DepGraph:
                 by_dep[e[2]] = [e]
             else:
                 es.append(e)
-        self._by_gov = by_gov
-        self._by_dep = by_dep
+        self.by_gov = by_gov
+        self.by_dep = by_dep
         self._adj: dict[int, list[tuple[int, str]]] | None = None
         # per-source BFS predecessor-map memo: one BFS serves every
         # destination, so the O(pairs) path queries of rules 1/2/3 and
@@ -102,7 +106,7 @@ class DepGraph:
 
     # ---- edge selections (SimpleDepGraph.java:244-317) ----
     def gov_edges(self, gov: int, pattern: str | None = None) -> list[Edge]:
-        es = self._by_gov.get(gov)
+        es = self.by_gov.get(gov)
         if es is None:
             return []
         if pattern is None:
@@ -111,7 +115,7 @@ class DepGraph:
         return [e for e in es if m[e[0]]]
 
     def dep_edges(self, dep: int, pattern: str | None = None) -> list[Edge]:
-        es = self._by_dep.get(dep)
+        es = self.by_dep.get(dep)
         if es is None:
             return []
         if pattern is None:
@@ -123,11 +127,8 @@ class DepGraph:
         m = match_table(pattern)
         return [e for e in self.edges if m[e[0]]]
 
-    def dependents(self, gov: int) -> list[int]:
-        return [e[2] for e in self._by_gov.get(gov, ())]
-
     def parent(self, dep: int) -> int:
-        es = self._by_dep.get(dep)
+        es = self.by_dep.get(dep)
         return es[0][1] if es else -1
 
     # ---- shortest path (SimpleDepGraph.java:190-242 / getPathAsList) ----
@@ -208,7 +209,7 @@ class DepGraph:
                 v = q.popleft()
                 if v == dst:
                     break
-                nbrs = sorted((e[2], e[0]) for e in self._by_gov.get(v, ()))
+                nbrs = sorted((e[2], e[0]) for e in self.by_gov.get(v, ()))
                 for (nxt, lab) in nbrs:
                     if nxt not in prev:
                         prev[nxt] = (v, lab)
@@ -250,7 +251,7 @@ class DepGraph:
             if d == max_dist:
                 continue
             if directed:
-                nbrs = [(e[2], e[0]) for e in self._by_gov.get(v, ())]
+                nbrs = [(e[2], e[0]) for e in self.by_gov.get(v, ())]
             else:
                 nbrs = adj.get(v, [])
             for nxt, lab in nbrs:

@@ -11,8 +11,8 @@ Java ``String.matches`` = full match, read from the reln's
 ``depgraph.match_table`` entry (a literal pattern such as ``neg`` is an
 equality test); ``Matcher.find`` -> ``re.search``.
 
-The rule bodies read the sentence's edge index (``DepGraph._by_gov`` /
-``_by_dep``) and ``Sent.proteins`` directly, and skip work that cannot
+The rule bodies read the sentence's edge index (``DepGraph.by_gov`` /
+``by_dep``) and ``Sent.proteins`` directly, and skip work that cannot
 produce a pair (rule1 without an ``nsubj|nsubjpass`` seed or without
 agents for it, rule3(a) with fewer than two ``prep_between`` edges, rule5
 on a token without two ``PROTEIN`` markers).  The reference enumerates
@@ -122,12 +122,12 @@ def _head_entity(head: int, tokens: list[str], by_gov: dict, np_t) -> int:
 
 def _entities(head: int, tokens: list[str], g: DepGraph, np_t) -> list[int]:
     # RelexRule.java:114-147
-    by_gov = g._by_gov
+    by_gov = g.by_gov
     agent = _head_entity(head, tokens, by_gov, np_t)
     if agent != -1:
         agents = [agent]
         if agent != head:
-            for e in g._by_dep.get(agent, ()):
+            for e in g.by_dep.get(agent, ()):
                 if _CONJ_T[e[0]]:
                     nxt = _head_entity(e[1], tokens, by_gov, np_t)
                     if nxt != -1:
@@ -146,14 +146,14 @@ def _chunk_has_domain(p: int, domain: list, g: DepGraph) -> bool:
     # RelexRule.getNPChunk (java:149-162): the span of p and its
     # nn|amod|advmod neighbours, either direction; any DOMAIN token in it
     lo = hi = p
-    for e in g._by_gov.get(p, ()):
+    for e in g.by_gov.get(p, ()):
         if e[0] in _NP_CHUNK_RELNS:
             d = e[2]
             if d < lo:
                 lo = d
             elif d > hi:
                 hi = d
-    for e in g._by_dep.get(p, ()):
+    for e in g.by_dep.get(p, ()):
         if e[0] in _NP_CHUNK_RELNS:
             d = e[1]
             if d < lo:
@@ -169,7 +169,7 @@ def _chunk_has_domain(p: int, domain: list, g: DepGraph) -> bool:
 # ------------------------------------------------------------------- Rule 1
 def _r1_agents(subj: int, main_head: int, s: Sent, g: DepGraph) -> set[int]:
     # RelexRule1.java:104-166
-    tokens, by_gov = s.tokens, g._by_gov
+    tokens, by_gov = s.tokens, g.by_gov
     agents: set[int] = set(_entities(subj, tokens, g, _R1_AGENT_T))
 
     prep_paths = _paths_from_src(subj, _R1_PREP_SEED_T, by_gov,
@@ -216,7 +216,7 @@ def rule1(s: Sent, g: DepGraph) -> set[Pair]:
     if not seeds:
         return out
     tokens, pos, domain = s.tokens, s.pos, s.domain
-    by_gov = g._by_gov
+    by_gov = g.by_gov
     neg: set[int] | None = None
     visited: set[int] = set()
     agents: set[int] = set()
@@ -258,6 +258,7 @@ def rule1(s: Sent, g: DepGraph) -> set[Pair]:
              domain[verb] is not None or domain[subj] is not None
              or _chunk_has_domain(subj, domain, g),
              verb in neg or subj in neg, False)
+    del walk  # walk's closure holds walk: break the cycle, free the frame now
     return out
 
 
@@ -273,7 +274,7 @@ def rule2(s: Sent, g: DepGraph) -> set[Pair]:
     if not seeds:
         return out
     tokens, pos, domain = s.tokens, s.pos, s.domain
-    by_gov = g._by_gov
+    by_gov = g.by_gov
     n_tok = len(tokens)
     visited: set[int] = set()
 
@@ -313,6 +314,7 @@ def rule2(s: Sent, g: DepGraph) -> set[Pair]:
         d = edge_dom(0, gv)
         if walk(dp, 1, d) and d:
             score(gv, dp)
+    del walk  # walk's closure holds walk: break the cycle, free the frame now
     return out
 
 
@@ -376,7 +378,7 @@ def _reach_proteins(src: int, tokens: list[str], g: DepGraph,
     """PROTEIN tokens reachable from ``src`` (itself included) over
     governed edges whose reln ``follow`` accepts — RelexRule3.getReachables
     (java:92-108) with domainSpecific set, as every caller passes it."""
-    by_gov = g._by_gov
+    by_gov = g.by_gov
     out: set[int] = set()
     seen = {src}
     stack = [src]
@@ -451,7 +453,7 @@ def rule5(s: Sent, g: DepGraph) -> set[Pair]:
             if domain[i + 1] is not None:
                 out.add((i, i))
             else:
-                for reln, gov, dep in g._by_dep.get(i, ()):
+                for reln, gov, dep in g.by_dep.get(i, ()):
                     if reln in _R5_GOV_RELNS and domain[gov] is not None:
                         out.add((i, i))
                         break
